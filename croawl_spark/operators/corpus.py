@@ -176,7 +176,7 @@ def pack_sequences(
     # distributed two-phase form below stays the >gate path.
     if driver_local_max_docs is None:
         driver_local_max_docs = DRIVER_LOCAL_MAX_PACK_DOCS
-    if toks.count() <= driver_local_max_docs:
+    if driver_local_max_docs > 0 and toks.count() <= driver_local_max_docs:
         local = _driver_local_pack_cumsum(toks, id_col)
         if local is not None:
             cum = local
@@ -755,9 +755,8 @@ def resample_sources(
                 sel = docs.join(
                     F.broadcast(kept_df), [id_col, source_col], "left_semi"
                 )
-                return (
-                    sel if out_all is None else out_all.unionByName(sel)
-                )
+                out = sel if out_all is None else out_all.unionByName(sel)
+                return out.select(*docs.columns)
         sel = _select(ranked_srcs, open_filter=False).localCheckpoint()
         got = {
             r["_s"]: r["_n"]
@@ -773,7 +772,10 @@ def resample_sources(
                 _select(short, open_filter=True)
             )
         out_all = sel if out_all is None else out_all.unionByName(sel)
-    return out_all if out_all is not None else docs.limit(0)
+    # the using-join in _select puts source_col first; restore docs' order
+    # so both paths return the same column order
+    out = out_all if out_all is not None else docs.limit(0)
+    return out.select(*docs.columns)
 
 
 def corpus_report(

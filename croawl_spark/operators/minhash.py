@@ -179,7 +179,8 @@ def _driver_local_lsh_pairs(
     equality standard the shingle/dedup family already documents.
 
     -> pandas DataFrame (id_a, id_b, est_sim) or None when ineligible
-    (non-integer ids, NULLs, or a candidate blow-up past the pair cap)."""
+    (non-integer ids, duplicate ids, NULLs, or a candidate blow-up past
+    the pair cap)."""
     import numpy as np
     import pandas as pd
     import pyarrow.types as pat
@@ -191,6 +192,10 @@ def _driver_local_lsh_pairs(
     if tbl.column(0).null_count or tbl.column(1).null_count:
         return None
     ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
+    if len(np.unique(ids)) != len(ids):
+        # duplicate ids: the distributed join's strict id_a < id_b drops
+        # (x, x) self-pairs that id-value orientation here would emit
+        return None
     if tbl.num_rows == 0:
         return pd.DataFrame({"id_a": [], "id_b": [], "est_sim": []})
     sig_col = tbl.column(1).combine_chunks()
@@ -262,7 +267,7 @@ def minhash_dedup_pairs(
     # _driver_local_lsh_pairs for the exactness argument).
     if driver_local_max_sigs is None:
         driver_local_max_sigs = DRIVER_LOCAL_MAX_SIGS
-    if sig.count() <= driver_local_max_sigs:
+    if driver_local_max_sigs > 0 and sig.count() <= driver_local_max_sigs:
         local = _driver_local_lsh_pairs(sig, id_col, n_perm, n_bands)
         if local is not None:
             spark = df.sparkSession

@@ -1,20 +1,23 @@
-"""Partitioned Bloom URL-seen filter maintained via vectorized Arrow UDFs (A6).
+"""Partitioned Bloom membership filter maintained via vectorized Arrow UDFs (A6).
 
 One Bloom filter per hash bucket (bucket = pmod(url_hash, n_buckets)), stored
-as a binary bit-array row in the ``seen_filter`` table. The filter is a
-*prefilter* in front of the exact anti-join: "definitely new" candidates skip
-the join against the (huge) seen table entirely; "maybe seen" candidates go
-through the exact join, which erases false positives. False negatives are
-impossible (every inserted hash sets its bits), so exactness is preserved —
-the driver's "URL-seen membership exact" rule holds while the anti-join's
-shuffled probe volume drops to the duplicate fraction + FP rate.
+as a binary bit-array row (schema ``tables.SEEN_FILTER``). The filter is a
+*prefilter* in front of an exact anti-join: "definitely new" candidates skip
+the join against the exact log entirely; "maybe seen" candidates go through
+the exact join, which erases false positives. False negatives are
+impossible (every inserted hash sets its bits), so exactness is preserved.
+
+Users: the streaming corpus ingest (``streaming/jobs.py``, its
+``content_filter`` table), where a negative answer lets a batch skip the
+content_seen log read altogether, and the ``bloom_roundtrip`` battery
+query. The crawl's URL-seen test is the exact anti-join alone: there the
+anti-join runs every cycle regardless, so a prefilter only added work.
 
 Sizing: m bits per bucket is FIXED per deployment (config) so incremental
-delta-builds can OR into existing arrays. At the 10^10-URL design point:
+delta-builds can OR into existing arrays. At the 10^10-item design point:
 4096 buckets x m=2^31 bits ≈ 1 GiB/bucket-row is wrong — instead scale
 n_buckets (e.g. 2^20 buckets x 2^17 bits = 16 KiB each ≈ 10 bits/item),
-keeping each bucket row small enough to shuffle freely. Buckets and the
-frontier share the same pmod key, so probe co-partitions with the anti-join.
+keeping each bucket row small enough to shuffle freely.
 
 All bit math is numpy (Arrow batches in, numpy out) — no per-row Python.
 Double hashing: position_i = (h1 + i*h2) mod m with h1/h2 the two 32-bit
@@ -33,45 +36,6 @@ from pyspark.sql import functions as F
 from croawl_spark.tables import SEEN_FILTER
 
 K_HASHES = 5
-
-# Sentinel embedded in the cuckoo build kernel's overflow error. The kernel
-# runs inside an Arrow UDF, so the exception crosses the JVM/Py4J boundary
-# as TEXT — a dedicated exception class can't survive the crossing, but a
-# unique token can. plans/cycle._write_filter_resilient matches THIS token
-# (never free prose like "cuckoo bucket", which an unrelated error message
-# could contain) to decide geometry-doubling vs re-raising.
-CUCKOO_OVERFLOW_SENTINEL = "CROAWL_CUCKOO_OVERFLOW"
-
-
-def committed_filter_kind(counters: dict, default_kind: str) -> str:
-    """AMQ kind recorded in a COMMITTED warehouse manifest.
-
-    Manifests written before the ``filter_kind`` counter existed carry
-    geometry counters but no kind; their kind is implied by WHICH geometry
-    counter they wrote (the bloom era wrote ``filter_m_bits`` only, the
-    cuckoo writer has always recorded ``filter_kind`` alongside
-    ``filter_m_slots``). Falling back to *cfg* here instead would let a
-    ``filter_kind='cuckoo'`` resume of a legacy bloom warehouse skip the
-    rebuild and reinterpret the bloom blob — silent when
-    m_bits == 64*m_slots coincide, yielding false negatives that bypass
-    the exact anti-join and re-admit seen URLs. Only a manifest with NO
-    filter counters at all (fresh crawl, or filter enabled mid-crawl)
-    falls back to the configured kind.
-    """
-    if "filter_kind" in counters:
-        return str(counters["filter_kind"])
-    if "filter_m_slots" in counters:
-        return "cuckoo"
-    if "filter_m_bits" in counters:
-        return "bloom"
-    return default_kind
-
-
-def projected_fp(n_items: int, m_bits: int) -> float:
-    """Bloom FP estimate for n_items in an m_bits bucket with K_HASHES
-    probes — the auto-sizing signal (plans/cycle.py doubles m_bits and
-    rebuilds when this crosses cfg.fp_max)."""
-    return (1.0 - math.exp(-K_HASHES * max(n_items, 1) / m_bits)) ** K_HASHES
 
 
 def _positions(hashes: np.ndarray, m: int) -> np.ndarray:
@@ -141,195 +105,6 @@ def build_filter(
         delta.groupBy("bucket")
         .cogroup(existing.groupBy("bucket"))
         .applyInPandas(_merge, SEEN_FILTER)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cuckoo variant (Fan et al., CoNEXT 2014): same partitioned layout, adds
-# DELETION support (e.g. forgetting URLs after recrawl-TTL expiry). Buckets
-# of 4 slots x 16-bit fingerprints; two candidate buckets via partial-key
-# cuckoo hashing. Build is a per-AMQ-bucket python loop (eviction chains are
-# inherently sequential) — bounded because n_buckets scales with corpus.
-# ---------------------------------------------------------------------------
-
-_CK_SLOTS = 4
-_CK_FPMASK = 0xFFFF
-
-
-def _ck_fp(h: np.ndarray) -> np.ndarray:
-    fp = ((h.astype(np.uint64) >> np.uint64(40)) & np.uint64(_CK_FPMASK)).astype(np.uint16)
-    fp[fp == 0] = 1  # 0 means empty slot
-    return fp
-
-
-def _ck_i1(h: np.ndarray, m: int) -> np.ndarray:
-    return (h.astype(np.uint64) & np.uint64(m - 1)).astype(np.int64)
-
-
-def _ck_alt(i: np.ndarray, fp: np.ndarray, m: int) -> np.ndarray:
-    # partial-key cuckoo: i2 = i1 XOR hash(fp)
-    fh = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(m - 1)
-    return (i.astype(np.uint64) ^ fh).astype(np.int64)
-
-
-class _CuckooTable:
-    def __init__(self, m_slots: int, blob: bytes | None = None):
-        assert m_slots & (m_slots - 1) == 0, "m_slots must be a power of 2"
-        self.m = m_slots
-        if blob is None:
-            self.t = np.zeros((m_slots, _CK_SLOTS), dtype=np.uint16)
-        else:
-            self.t = np.frombuffer(blob, dtype=np.uint16).reshape(m_slots, _CK_SLOTS).copy()
-
-    def insert(self, h: int) -> bool:
-        arr = np.array([h], dtype=np.int64)
-        fp = int(_ck_fp(arr)[0])
-        i1 = int(_ck_i1(arr, self.m)[0])
-        i2 = int(_ck_alt(np.array([i1]), np.array([fp], dtype=np.uint16), self.m)[0])
-        for i in (i1, i2):
-            empty = np.where(self.t[i] == 0)[0]
-            if len(empty):
-                self.t[i, empty[0]] = fp
-                return True
-        # evict: random-walk via deterministic rotation
-        i, cur = i1, fp
-        for kick in range(500):
-            slot = kick % _CK_SLOTS
-            cur, self.t[i, slot] = int(self.t[i, slot]), cur
-            i = int(_ck_alt(np.array([i]), np.array([cur], dtype=np.uint16), self.m)[0])
-            empty = np.where(self.t[i] == 0)[0]
-            if len(empty):
-                self.t[i, empty[0]] = cur
-                return True
-        return False  # table overfull
-
-    def contains_many(self, hs: np.ndarray) -> np.ndarray:
-        fp = _ck_fp(hs)
-        i1 = _ck_i1(hs, self.m)
-        i2 = _ck_alt(i1, fp, self.m)
-        in1 = (self.t[i1] == fp[:, None]).any(axis=1)
-        in2 = (self.t[i2] == fp[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete(self, h: int) -> bool:
-        arr = np.array([h], dtype=np.int64)
-        fp = int(_ck_fp(arr)[0])
-        i1 = int(_ck_i1(arr, self.m)[0])
-        i2 = int(_ck_alt(np.array([i1]), np.array([fp], dtype=np.uint16), self.m)[0])
-        for i in (i1, i2):
-            hit = np.where(self.t[i] == fp)[0]
-            if len(hit):
-                self.t[i, hit[0]] = 0
-                return True
-        return False
-
-
-def build_cuckoo_filter(
-    seen: DataFrame, n_buckets: int = 64, m_slots: int = 1 << 12,
-    existing: DataFrame | None = None, deletes: DataFrame | None = None,
-    seen_seq: str | None = None, deletes_seq: str | None = None,
-) -> DataFrame:
-    """Per-bucket cuckoo filter over seen(url_hash); supports incremental
-    inserts (``seen`` delta + ``existing``) and deletions (``deletes``).
-
-    Operation ORDER within a delta: pass ``seen_seq``/``deletes_seq``
-    (column names carrying a shared logical sequence) to apply interleaved
-    insert/delete ops in that order — required when one delta both deletes
-    and re-inserts the same hash. Without them, all inserts apply before
-    all deletes (delete wins an insert+delete pair).
-
-    Eviction-chain OVERFLOW (insert returns False) RAISES: a silently
-    dropped item would be a false negative — the documented
-    'no false negatives for present items' guarantee — and would also
-    corrupt n_items. Size m_slots for <= ~95% load (capacity ~= 0.95 *
-    m_slots * 4 per bucket) or grow n_buckets; the error message carries
-    the load so the caller can re-geometry and rebuild.
-    """
-
-    def _merge(key, new_pdf: pd.DataFrame, old_pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(key[0])
-        blob = old_pdf["bits"].iloc[0] if len(old_pdf) else None
-        n_old = int(old_pdf["n_items"].iloc[0]) if len(old_pdf) else 0
-        ck = _CuckooTable(m_slots, blob)
-        ordered = new_pdf.sort_values("seq", kind="stable")
-        n_ins = n_del = 0
-        for h, op in zip(ordered["url_hash"], ordered["op"]):
-            if op == 1:
-                if not ck.insert(int(h)):
-                    raise RuntimeError(
-                        f"{CUCKOO_OVERFLOW_SENTINEL}: cuckoo bucket "
-                        f"{bucket} overflow at load "
-                        f"{n_old + n_ins}/{m_slots * _CK_SLOTS} slots: "
-                        "resize m_slots/n_buckets and rebuild"
-                    )
-                n_ins += 1
-            else:
-                n_del += int(ck.delete(int(h)))
-        n = n_old + n_ins - n_del
-        fp_rate = 2.0 * _CK_SLOTS / (1 << 16)
-        return pd.DataFrame(
-            {"bucket": [bucket], "kind": ["cuckoo"], "bits": [ck.t.tobytes()],
-             "n_items": [n], "fp_rate": [fp_rate]}
-        )
-
-    ins_seq = F.col(seen_seq).cast("long") if seen_seq else F.lit(0).cast("long")
-    delta = seen.select(
-        F.pmod("url_hash", F.lit(n_buckets)).cast("int").alias("bucket"),
-        "url_hash",
-        F.lit(1).alias("op"),
-        ins_seq.alias("seq"),
-    )
-    if deletes is not None:
-        del_seq = (
-            F.col(deletes_seq).cast("long") if deletes_seq else F.lit(1).cast("long")
-        )
-        delta = delta.unionByName(
-            deletes.select(
-                F.pmod("url_hash", F.lit(n_buckets)).cast("int").alias("bucket"),
-                "url_hash",
-                F.lit(0).alias("op"),
-                del_seq.alias("seq"),
-            )
-        )
-    if existing is None:
-        from croawl_spark.tables import empty_frame
-
-        existing = empty_frame(delta.sparkSession, SEEN_FILTER)
-    return (
-        delta.groupBy("bucket")
-        .cogroup(existing.groupBy("bucket"))
-        .applyInPandas(_merge, SEEN_FILTER)
-    )
-
-
-def probe_cuckoo(
-    candidates: DataFrame, filt: DataFrame, n_buckets: int = 64, m_slots: int = 1 << 12
-) -> DataFrame:
-    """Append ``maybe_seen`` using the cuckoo table (no false negatives for
-    present items; deletions are exact for items inserted once)."""
-    cand = candidates.withColumn(
-        "bucket", F.pmod("url_hash", F.lit(n_buckets)).cast("int")
-    )
-    out_schema = candidates.withColumn("maybe_seen", F.lit(True)).schema
-    out_cols = [f.name for f in out_schema.fields]
-
-    def _probe(key, cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-        if len(filt_pdf) == 0:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        else:
-            ck = _CuckooTable(m_slots, filt_pdf["bits"].iloc[0])
-            maybe = ck.contains_many(hashes)
-        out = cand_pdf.drop(columns=["bucket"]).copy()
-        out["maybe_seen"] = maybe
-        return out
-
-    return (
-        cand.groupBy("bucket")
-        .cogroup(filt.select("bucket", "bits").groupBy("bucket"))
-        .applyInPandas(_probe, out_schema)
     )
 
 

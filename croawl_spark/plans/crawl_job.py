@@ -29,15 +29,6 @@ def main() -> None:
                     help="continue from the last committed cycle")
     ap.add_argument("--n-salt", type=int, default=16)
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--m-bits", type=int, default=1 << 15,
-                    help="bloom bits per bucket (auto-doubled past --fp-max)")
-    ap.add_argument("--fp-max", type=float, default=0.05,
-                    help="rebuild the seen-filter when projected FP crosses this")
-    ap.add_argument("--no-filter", action="store_true", help="disable AMQ prefilter")
-    ap.add_argument("--filter-kind", choices=("bloom", "cuckoo"), default="bloom",
-                    help="AMQ kind: cuckoo supports streamed TTL-expiry deletes")
-    ap.add_argument("--m-slots", type=int, default=1 << 12,
-                    help="cuckoo slots per bucket (power of 2; capacity 4x)")
     ap.add_argument("--frontier-mode", choices=("tombstone", "rewrite"),
                     default="tombstone",
                     help="tombstone = O(batch+new) frontier checkpoint per cycle")
@@ -55,11 +46,6 @@ def main() -> None:
         k_per_host=args.budget,
         n_salt=args.n_salt,
         n_buckets=args.n_buckets,
-        m_bits=args.m_bits,
-        fp_max=args.fp_max,
-        use_filter=not args.no_filter,
-        filter_kind=args.filter_kind,
-        m_slots=args.m_slots,
         frontier_mode=args.frontier_mode,
         frontier_compact_every=args.compact_every,
     )

@@ -28,12 +28,12 @@ seen-set are the driver's correctness gate):
     5. parse (V3): DC/OAI metadata + outlinks from text spans in offset
        order. doc_id = canon_url.
     6. frontier update: outlinks -> canonicalize -> first-wins per canon_url
-       by (parent fetch_seq, link position) -> Bloom prefilter -> exact
-       anti-join against seen on (url_hash, canon_url) -> assign
+       by (parent fetch_seq, link position) -> exact anti-join against
+       seen on (url_hash, canon_url) -> assign
        disc_seq = next_disc_seq counter + rank over (parent_fetch_seq,
        link_pos); depth = parent_depth + 1. Batch rows leave the frontier;
        ALL new URLs enter seen; robots-allowed new rows enter the frontier.
-    7. checkpoint: snapshots (frontier, seen, host_state, seen_filter) +
+    7. checkpoint: snapshots (frontier, seen, host_state) +
        logs (fetch_log, documents, metadata, metrics) written, then the
        cycle manifest commits atomically (TableIO).
 
@@ -66,80 +66,18 @@ from croawl_spark.functions import urls as U
 
 from croawl_spark.operators.dedup import first_wins
 from croawl_spark.operators.ranking import global_sequence, salted_topk
-from croawl_spark.operators.seenfilter import (
-    _CK_SLOTS,
-    CUCKOO_OVERFLOW_SENTINEL,
-    build_cuckoo_filter,
-    build_filter,
-    committed_filter_kind,
-    probe_cuckoo,
-    probe_filter,
-)
 from croawl_spark.sources.tableio import TableIO
 
 BASE_TIME = _dt.datetime(2024, 1, 1)
-
-
-def _filter_geo(cfg: "CrawlConfig") -> int:
-    """Per-kind geometry scalar: bloom -> bits/bucket, cuckoo -> slots/bucket."""
-    return cfg.m_slots if cfg.filter_kind == "cuckoo" else cfg.m_bits
-
-
-def _geo_counter(kind: str) -> str:
-    return "filter_m_slots" if kind == "cuckoo" else "filter_m_bits"
-
-
-def _build_seen_filter(
-    kind: str, seen: DataFrame, n_buckets: int, geo: int, existing=None
-) -> DataFrame:
-    if kind == "cuckoo":
-        return build_cuckoo_filter(seen, n_buckets, geo, existing=existing)
-    return build_filter(seen, n_buckets, geo, existing=existing)
-
-
-def _probe_seen_filter(
-    kind: str, cand: DataFrame, filt: DataFrame, n_buckets: int, geo: int
-) -> DataFrame:
-    if kind == "cuckoo":
-        return probe_cuckoo(cand, filt, n_buckets, geo)
-    return probe_filter(cand, filt, n_buckets, geo)
-
-
-def _write_filter_resilient(
-    io: TableIO, filt_next: DataFrame, cycle: int,
-    kind: str, n_buckets: int, geo: int, full_seen: DataFrame,
-) -> int:
-    """Write the filter snapshot; on cuckoo eviction-chain overflow (raised
-    by the build kernel — hash skew can saturate one AMQ bucket while the
-    average load looks fine) double the geometry and rebuild from the exact
-    seen log until it fits. Returns the final geometry."""
-    while True:
-        try:
-            io.write_snapshot(filt_next, "seen_filter", cycle)
-            return geo
-        except Exception as e:  # Py4J wraps the worker RuntimeError as text
-            if CUCKOO_OVERFLOW_SENTINEL not in str(e):
-                raise
-            geo *= 2
-            filt_next = _build_seen_filter(kind, full_seen, n_buckets, geo)
 
 
 @dataclass
 class CrawlConfig:
     k_per_host: int = 2          # politeness budget: fetches per host per cycle
     n_salt: int = 8              # W1 skew salt
-    n_buckets: int = 64          # seen_filter buckets (scale: O(millions))
-    m_bits: int = 1 << 15        # bloom bits per bucket (auto-doubled, see fp_max)
-    fp_max: float = 0.05         # rebuild the filter when projected FP crosses this
-    use_filter: bool = True
-    # AMQ kind: "bloom" (insert-only; expiry rebuilds) or "cuckoo"
-    # (supports streamed deletions — recrawl-TTL expiry deletes the expired
-    # hashes from the filter instead of rebuilding it). Both are exact
-    # prefilters: FPs are erased by the anti-join, FNs are impossible
-    # (cuckoo deletion is copy-safe: every distinct URL inserts its own
-    # fingerprint copy, so deleting one URL cannot unmark a collider).
-    filter_kind: str = "bloom"
-    m_slots: int = 1 << 12       # cuckoo slots/bucket (capacity 4x, power of 2)
+    n_buckets: int = 64          # metrics lineage buckets: pmod(url_hash, n_buckets)
+    # not read by the crawl; bench.py, __spark_entry__.py and perfbench still pass it
+    m_bits: int = 1 << 15
     # frontier checkpointing: "tombstone" appends O(batch) delete keys +
     # O(new) add rows per cycle and resolves adds-minus-dels at read time
     # (the Iceberg positional-delete shape — at 10^10 URLs a per-cycle
@@ -334,31 +272,10 @@ def bootstrap(
         frontier_tables = ["frontier"]
     io.write_snapshot(seen, "seen", -1)  # first segment of the append-only seen log
     io.write_snapshot(host_state, "host_state", -1)
-    geo = _filter_geo(cfg)
-    if cfg.use_filter:
-        if cfg.filter_kind == "cuckoo":
-            # proactive pre-size: keep average load <= 80% of slots
-            per_bucket = -(-int(n_seeds) // cfg.n_buckets)
-            while per_bucket > int(0.8 * geo * _CK_SLOTS):
-                geo *= 2
-        filt = _build_seen_filter(cfg.filter_kind, seen, cfg.n_buckets, geo)
-        geo = _write_filter_resilient(
-            io, filt, -1, cfg.filter_kind, cfg.n_buckets, geo,
-            seen.select("url_hash"),
-        )
-    counters = {"total_fetches": 0, "next_disc_seq": int(n_seeds)}
-    if cfg.use_filter:
-        # filter KIND + GEOMETRY are part of the committed state: blobs are
-        # only probeable under the (kind, n_buckets, geometry) they were
-        # built with, so a resume with different config must trigger a
-        # rebuild, never a silent mis-probe (false negatives = refetch storms)
-        counters["filter_kind"] = cfg.filter_kind
-        counters["filter_n_buckets"] = cfg.n_buckets
-        counters[_geo_counter(cfg.filter_kind)] = geo
     io.commit_cycle(
         -1,
-        frontier_tables + ["seen", "host_state"] + (["seen_filter"] if cfg.use_filter else []),
-        counters=counters,
+        frontier_tables + ["seen", "host_state"],
+        counters={"total_fetches": 0, "next_disc_seq": int(n_seeds)},
     )
     frontier.unpersist()
     host_state.unpersist()
@@ -382,19 +299,9 @@ def _filter_allowed(rows: DataFrame, host_state: DataFrame) -> DataFrame:
 
 def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) -> dict:
     """One scheduler cycle; returns counters for metrics/bench."""
-    import os as _os
     import time as _time
 
-    _prof = _os.environ.get("CROAWL_PROFILE") == "1"
     _cycle_start = _time.perf_counter()
-    _t0 = [_cycle_start]
-
-    def _mark(label: str) -> None:
-        if _prof:
-            now = _time.perf_counter()
-            print(f"  [cycle {cycle}] {label}: {now - _t0[0]:.1f}s", flush=True)
-            _t0[0] = now
-
     if cfg.frontier_mode == "tombstone":
         # adds-minus-tombstones view: the dels side is O(cycles × batch),
         # so AQE resolves it as a broadcast anti-join — no frontier shuffle
@@ -406,37 +313,11 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     # O(delta) — the Iceberg-append pattern (TableIO emulates it)
     seen = io.read_log("seen", cycle - 1)
     host_state = io.read_snapshot("host_state", cycle - 1)
-    filt = None
-    if cfg.use_filter:
-        try:
-            filt = io.read_snapshot("seen_filter", cycle - 1)
-        except FileNotFoundError:
-            pass  # filter enabled mid-crawl: rebuilt from the seen log below
-
-    # filter kind+geometry come from the COMMITTED counters, not cfg: bit
-    # blobs are only probeable under the (kind, geometry) they were built
-    # with. A resume under different cfg rebuilds from the exact seen log
-    # (O(seen), rare) instead of silently mis-probing (false negatives ->
-    # refetches) — this also makes switching bloom<->cuckoo mid-crawl safe.
     counters = io.counters()
-    geo_kind = committed_filter_kind(counters, cfg.filter_kind)
-    geo_buckets = int(counters.get("filter_n_buckets", cfg.n_buckets))
-    geo = int(counters.get(_geo_counter(geo_kind), _filter_geo(cfg)))
-    if cfg.use_filter and (
-        filt is None
-        or geo_kind != cfg.filter_kind
-        or geo_buckets != cfg.n_buckets
-        or geo < _filter_geo(cfg)
-    ):
-        # (committed geometry LARGER than cfg is fine — that's the auto-
-        # sizer having grown a new generation; keep it, don't shrink-thrash)
-        geo_kind, geo_buckets, geo = cfg.filter_kind, cfg.n_buckets, _filter_geo(cfg)
-        filt = _build_seen_filter(geo_kind, seen, geo_buckets, geo)
 
     # due-time gate (J2 broadcast join: hosts << frontier). Robots were
     # enforced at insert time — the frontier contains only allowed rows.
     hs = F.broadcast(host_state.select("host", "crawl_delay", "last_fetch_cycle"))
-    _mark("read snapshots + gates defined")
     eligible = frontier.join(hs, "host", "left").filter(
         F.col("last_fetch_cycle").isNull()
         | (F.lit(cycle) >= F.col("last_fetch_cycle") + F.ceil("crawl_delay"))
@@ -460,7 +341,6 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         eager_input=True,  # r06: don't re-run the top-k windows for the
         # range-boundary sample pass
     ).localCheckpoint()
-    _mark("rank+seq batch")
 
     # 4. fetch — persist: feeds fetch_log, documents AND parse; without it
     # the synthetic fetch (at scale: the real fetch!) re-executes per sink
@@ -529,21 +409,14 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         .withColumn("host", U.host_of("canon_url"))
     )
     ded = first_wins(links, "canon_url", ["parent_fetch_seq", "link_pos"])
-    if cfg.use_filter and filt is not None:
-        probed = _probe_seen_filter(geo_kind, ded, filt, geo_buckets, geo)
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        survivors = maybe.join(seen, ["url_hash", "canon_url"], "left_anti")
-        new_links = fresh.unionByName(survivors)
-    else:
-        new_links = ded.join(seen, ["url_hash", "canon_url"], "left_anti")
+    new_links = ded.join(seen, ["url_hash", "canon_url"], "left_anti")
 
     seen_base = int(counters.get("next_disc_seq", 0))
     new_rows = global_sequence(
         new_links, ["parent_fetch_seq", "link_pos"], "disc_seq",
         start=seen_base,
-        eager_input=True,  # r06: don't re-run the seen-probe/anti-join
-        # tail for the range-boundary sample pass
+        eager_input=True,  # r06: don't re-run the seen anti-join tail
+        # for the range-boundary sample pass
     ).select(
         "url",
         "canon_url",
@@ -556,10 +429,8 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         F.lit(cycle).cast("int").alias("added_cycle"),
     )
     new_rows = new_rows.localCheckpoint()
-    _mark("links+dedup+probe+anti+seq")
 
     n_new = new_rows.count()
-    _mark("n_new count")
     # seen delta: ALL newly discovered URLs (denied ones included)
     seen_delta = new_rows.select("url_hash", "canon_url", "disc_seq")
 
@@ -589,7 +460,7 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     n_parsed_df = parsed.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("n_spans"), F.lit(0)).alias("s")
     ).collect()[0]
-    _bucket = F.pmod("url_hash", F.lit(geo_buckets)).cast("int").alias("partition_id")
+    _bucket = F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("partition_id")
     sched_b = batch.groupBy(_bucket).agg(F.count(F.lit(1)).alias("urls_scheduled"))
     parsed_b = parsed.groupBy(_bucket).agg(
         F.count(F.lit(1)).alias("urls_parsed"),
@@ -607,8 +478,6 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
             F.concat(F.lit(f"{cycle}:"), F.col("partition_id")).alias("lineage_ref"),
         )
     )
-
-    _mark("metrics prep")
 
     # r06 (guide §2.6 — overlap independent jobs): the per-cycle sink
     # writes are independent of each other (each reads already-persisted /
@@ -677,7 +546,6 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         _f_fetch.result()
         _f_side.result()
         frontier_tables, replace_tables = _f_frontier.result()
-    _mark("table writes (3 threads)")
     committed = [
         "fetch_log", "documents", "metadata", "metrics",
         "seen", "host_state", "content_dups", "content_seen",
@@ -687,45 +555,6 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         "next_disc_seq": seen_base + int(n_new),
         "last_cycle_wall_ms": _cycle_wall_ms,
     }
-    if cfg.use_filter:
-        # auto-sizing: geometry is fixed per filter generation (incremental
-        # merges require it), so when the committed load pushes the filter
-        # past its design point we START A NEW GENERATION — double the
-        # geometry until under target and rebuild from the exact seen log.
-        # bloom signal: projected FP > fp_max (FP never affects crawl
-        # output, this only bounds wasted anti-join probe volume); cuckoo
-        # signal: slot load factor > 0.85 (insert overflow would raise).
-        from croawl_spark.operators.seenfilter import projected_fp
-
-        total_seen = seen_base + int(n_new)
-        per_bucket = -(-total_seen // geo_buckets)  # ceil
-        resized = False
-        if geo_kind == "cuckoo":
-            while per_bucket > int(0.8 * geo * _CK_SLOTS):
-                geo *= 2
-                resized = True
-        else:
-            while projected_fp(per_bucket, geo) > cfg.fp_max:
-                geo *= 2
-                resized = True
-        all_seen = seen.unionByName(seen_delta).select("url_hash")
-        if resized:
-            filt_next = _build_seen_filter(geo_kind, all_seen, geo_buckets, geo)
-        else:
-            delta = new_rows.select("url_hash")
-            filt_next = _build_seen_filter(
-                geo_kind, delta, geo_buckets, geo, existing=filt
-            )
-        # hash skew can overflow one cuckoo bucket while the average load
-        # is fine — the resilient writer doubles geometry and rebuilds
-        geo = _write_filter_resilient(
-            io, filt_next, cycle, geo_kind, geo_buckets, geo, all_seen
-        )
-        _mark(f"{geo_kind} filter update" + (" (resized)" if resized else ""))
-        committed.append("seen_filter")
-        new_counters["filter_kind"] = geo_kind
-        new_counters["filter_n_buckets"] = geo_buckets
-        new_counters[_geo_counter(geo_kind)] = geo
     io.commit_cycle(cycle, committed, counters=new_counters, replace=replace_tables)
     if replace_tables:
         for t in replace_tables:

@@ -1,38 +1,25 @@
 """Warehouse maintenance jobs — run BETWEEN crawl cycles, never inside one.
 
-``expire_recrawl`` is the recrawl-TTL story (SURVEY.md §2.4 A6: cuckoo
-deletion exists "e.g. forgetting URLs after recrawl-TTL expiry"): URLs
-fetched more than ``ttl`` cycles ago are forgotten from the URL-seen set,
-so the next time a link to them is discovered they are treated as new and
-refetched — recrawl-on-rediscovery, the natural policy for a link-driven
-scheduler (unreferenced pages age out of the crawl entirely).
+``expire_recrawl`` is the recrawl-TTL story: URLs fetched more than
+``ttl`` cycles ago are forgotten from the URL-seen set, so the next time a
+link to them is discovered they are treated as new and refetched —
+recrawl-on-rediscovery, the natural policy for a link-driven scheduler
+(unreferenced pages age out of the crawl entirely).
 
 Scale shape: one anti-join keyed on (url_hash, canon_url) producing the
-retained seen set, one log compaction (O(retained) rewrite — amortized:
-run every ~ttl cycles, not every cycle), one filter update. The bloom
-filter cannot delete, so expiry rebuilds it from the retained set (this is
-exactly the auto-sizer's rebuild path); a cuckoo crawl
-(CrawlConfig.filter_kind="cuckoo") instead STREAMS the expired hashes as
-deletions through ``build_cuckoo_filter(..., deletes=expired)`` — an
-O(expired) update, no O(seen) rebuild.
+retained seen set and one log compaction (O(retained) rewrite — amortized:
+run every ~ttl cycles, not every cycle). The seen log is the crawl's only
+URL-seen state, so nothing else needs updating.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from croawl_spark.operators.seenfilter import (
-    build_cuckoo_filter,
-    build_filter,
-    committed_filter_kind,
-)
 from croawl_spark.sources.tableio import TableIO
 
 
-def expire_recrawl(
-    spark: SparkSession, io: TableIO, ttl: int, cfg
-) -> dict:
+def expire_recrawl(io: TableIO, ttl: int) -> dict:
     """Forget URLs whose LAST fetch is older than ttl cycles.
 
     Returns counters {expired, retained}. Idempotent: re-running with the
@@ -55,27 +42,4 @@ def expire_recrawl(
     retained = retained.localCheckpoint()  # sever lineage from old segments
     n_exp = seen.count() - retained.count()
     io.compact_log(retained, "seen", last + 1)
-    counters = io.counters()
-    geo_kind = committed_filter_kind(counters, getattr(cfg, "filter_kind", "bloom"))
-    geo_buckets = int(counters.get("filter_n_buckets", cfg.n_buckets))
-    if cfg.use_filter:
-        if geo_kind == "cuckoo":
-            # O(expired) streamed deletion — the reason cuckoo is offered:
-            # no O(seen) rebuild, the existing blobs are updated in place
-            geo_slots = int(counters.get("filter_m_slots", cfg.m_slots))
-            filt = io.read_snapshot("seen_filter")
-            empty = spark.range(0).select(  # pure-JVM empty (r06)
-                F.col("id").alias("url_hash")
-            )
-            filt_next = build_cuckoo_filter(
-                empty, geo_buckets, geo_slots,
-                existing=filt, deletes=expired.select("url_hash"),
-            )
-        else:
-            geo_m = int(counters.get("filter_m_bits", cfg.m_bits))
-            filt_next = build_filter(
-                retained.select("url_hash"), geo_buckets, geo_m
-            )
-        io.write_snapshot(filt_next, "seen_filter", last + 1)
-        io.commit_cycle(last + 1, ["seen_filter"])
     return {"expired": int(n_exp), "retained": int(retained.count())}

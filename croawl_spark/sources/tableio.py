@@ -15,7 +15,7 @@ read and harmlessly overwritten on replay — idempotent resume, which is the
 Iceberg property the crawl loop actually relies on (BASELINE.json:
 "resumable from checkpoint with per-partition lineage").
 
-Snapshot tables (frontier/seen/host_state/seen_filter) read ONLY their
+Snapshot tables (frontier/seen/host_state) read ONLY their
 latest committed cycle; log tables (fetch_log/documents/metadata/metrics)
 read the union of all committed cycles — partition pruning by ``cycle``
 comes free from the directory layout.
@@ -30,7 +30,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SNAPSHOT_TABLES = ("frontier", "seen", "host_state", "seen_filter")
+SNAPSHOT_TABLES = ("frontier", "seen", "host_state")
 
 
 class TableIO:

@@ -118,119 +118,18 @@ def test_resume_equals_uninterrupted(spark):
         assert _spark_log_rows(io_res) == full
 
 
-def test_bloom_filter_off_same_result(spark):
-    """The AMQ prefilter is a pure optimization: on/off must not change
-    the crawl (FP erased by exact anti-join; FN impossible)."""
-    seeds = synth.gen_seeds(60)
-    cfg_off = CrawlConfig(k_per_host=2, n_salt=4, use_filter=False)
-    with tempfile.TemporaryDirectory() as d:
-        a = _spark_log_rows(run_crawl(spark, seeds, 3, f"{d}/a", CFG))
-        b = _spark_log_rows(run_crawl(spark, seeds, 3, f"{d}/b", cfg_off))
-    assert a == b
-
-
-def test_filter_autosize_rebuilds_and_restores_fp(spark):
-    """Drive the bloom filter past its design load: the auto-sizer must
-    start a new generation (m_bits doubled in the committed counters),
-    restore projected FP under fp_max, and never change crawl output."""
-    from croawl_spark.operators.seenfilter import projected_fp
-
-    seeds = synth.gen_seeds(80)
-    tiny = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=4, m_bits=1 << 8, fp_max=0.05)
-    off = CrawlConfig(k_per_host=2, n_salt=4, use_filter=False)
-    with tempfile.TemporaryDirectory() as d:
-        io = run_crawl(spark, seeds, 3, f"{d}/tiny", tiny)
-        want = _spark_log_rows(run_crawl(spark, seeds, 3, f"{d}/off", off))
-        got = _spark_log_rows(io)
-        counters = io.counters()
-        m_committed = counters["filter_m_bits"]
-        n_seen = io.read_log("seen").count()
-        filt = io.read_snapshot("seen_filter")
-        n_rows = filt.count()
-    assert got == want  # filter is a pure optimization, resized or not
-    assert m_committed > (1 << 8), "auto-sizer never fired"
-    per_bucket = -(-n_seen // tiny.n_buckets)
-    assert projected_fp(per_bucket, m_committed) <= tiny.fp_max
-    assert n_rows == tiny.n_buckets
-
-
-def test_resume_with_different_filter_geometry(spark):
-    """Resuming with a different --n-buckets must rebuild the filter from
-    the seen log (committed geometry wins until rebuilt), not mis-probe
-    old blobs under a new pmod — fetch_log stays byte-identical."""
-    seeds = synth.gen_seeds(60)
-    cfg_a = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=16, m_bits=1 << 12)
-    cfg_b = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=4, m_bits=1 << 10)
-    with tempfile.TemporaryDirectory() as d:
-        full = _spark_log_rows(run_crawl(spark, seeds, 3, f"{d}/full", cfg_a))
-        run_crawl(spark, seeds, 2, f"{d}/part", cfg_a)
-        io_res = run_crawl(spark, seeds, 3, f"{d}/part", cfg_b, resume=True)
-        assert _spark_log_rows(io_res) == full
-        # the resumed run now owns cfg_b geometry in the committed counters
-        assert io_res.counters()["filter_n_buckets"] == 4
-
-
-def test_committed_filter_kind_resolution():
-    """Kind resolution for committed manifests (ADVICE r03, medium): an
-    explicit counter wins; a legacy manifest (geometry counter, no kind)
-    resolves to the kind that geometry counter implies — NEVER to cfg;
-    only a manifest with no filter counters at all falls back to cfg."""
-    from croawl_spark.operators.seenfilter import committed_filter_kind
-
-    assert committed_filter_kind({"filter_kind": "cuckoo"}, "bloom") == "cuckoo"
-    # pre-filter_kind manifests were written by the bloom-only engine
-    assert committed_filter_kind({"filter_m_bits": 4096}, "cuckoo") == "bloom"
-    assert committed_filter_kind({"filter_m_slots": 64}, "bloom") == "cuckoo"
-    assert committed_filter_kind({}, "cuckoo") == "cuckoo"  # fresh warehouse
-
-
-def test_resume_legacy_manifest_as_cuckoo_rebuilds(spark):
-    """Resuming a pre-upgrade (no filter_kind counter) bloom warehouse
-    with cfg.filter_kind='cuckoo' must detect the kind mismatch and
-    rebuild from the seen log — the old cfg-fallback skipped the rebuild
-    and probe_cuckoo reinterpreted the bloom blob; at m_bits == 64*m_slots
-    the sizes coincide so the mis-probe was silent and its false negatives
-    bypassed the exact anti-join (re-admitting seen URLs)."""
-    import json as _json
-
-    seeds = synth.gen_seeds(60)
-    # the exact silent-mis-probe geometry from the advisory:
-    # bloom blob bytes (m_bits/8) == cuckoo blob bytes (m_slots*8)
-    bloom = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=16, m_bits=1 << 12)
-    cuckoo = CrawlConfig(
-        k_per_host=2, n_salt=4, n_buckets=16,
-        filter_kind="cuckoo", m_slots=(1 << 12) // 64,
-    )
-    with tempfile.TemporaryDirectory() as d:
-        full = _spark_log_rows(run_crawl(spark, seeds, 3, f"{d}/full", bloom))
-        io_part = run_crawl(spark, seeds, 2, f"{d}/part", bloom)
-        # forge a legacy manifest: geometry counters present, kind absent
-        mpath = io_part._manifest_path
-        with open(mpath) as f:
-            m = _json.load(f)
-        assert m["counters"].pop("filter_kind") == "bloom"
-        with open(mpath, "w") as f:
-            _json.dump(m, f)
-        io_res = run_crawl(spark, seeds, 3, f"{d}/part", cuckoo, resume=True)
-        assert _spark_log_rows(io_res) == full
-        c = io_res.counters()
-        assert c["filter_kind"] == "cuckoo" and "filter_m_slots" in c
-
-
 def test_expire_recrawl_forgets_and_requeues(spark):
     """Recrawl-TTL maintenance: URLs last-fetched > ttl cycles ago are
-    compacted out of the seen log AND the rebuilt filter, so a rediscovered
-    link to them passes the whole seen gate (filter probe + exact
-    anti-join) as new; the continued crawl stays consistent and
+    compacted out of the seen log, so a rediscovered link to them passes
+    the exact anti-join as new; the continued crawl stays consistent and
     deterministic across reruns."""
-    from croawl_spark.operators.seenfilter import probe_filter
     from croawl_spark.plans.maintenance import expire_recrawl
 
     seeds = synth.gen_seeds(60)
 
     def run_with_expiry(d, check=False):
         io = run_crawl(spark, seeds, 3, d, CFG)
-        stats = expire_recrawl(spark, io, ttl=2, cfg=CFG)
+        stats = expire_recrawl(io, ttl=2)
         if check:
             # asserts at the post-expiry point, before the continuation
             assert stats["expired"] > 0
@@ -244,19 +143,12 @@ def test_expire_recrawl_forgets_and_requeues(spark):
             seen = io.read_log("seen")
             n_expired = expired.count()
             assert n_expired == stats["expired"] and n_expired > 0
-            # the full seen gate treats them as new: exact anti-join passes
-            # all of them, and the rebuilt filter genuinely forgot them
+            # the seen gate treats them as new: the exact anti-join passes
+            # all of them
             assert (
                 expired.join(seen, ["url_hash", "canon_url"], "left_anti").count()
                 == n_expired
             )
-            filt = io.read_snapshot("seen_filter")
-            counters = io.counters()
-            probed = probe_filter(
-                expired, filt,
-                int(counters["filter_n_buckets"]), int(counters["filter_m_bits"]),
-            )
-            assert probed.filter(~F.col("maybe_seen")).count() > 0
         io = run_crawl(spark, seeds, 7, d, CFG, resume=True)
         return io
 
@@ -297,80 +189,6 @@ def test_tombstone_frontier_read_volume_is_live_not_history(spark):
         assert len(m["tables"]["frontier__dels"]) < k
         adds_n = io_n.read_log("frontier__adds").count()
         assert adds_c < adds_n
-
-
-def test_enable_filter_mid_crawl(spark):
-    """Turning the bloom prefilter ON for a warehouse crawled without one
-    must rebuild from the seen log and continue identically."""
-    seeds = synth.gen_seeds(60)
-    off = CrawlConfig(k_per_host=2, n_salt=4, use_filter=False)
-    with tempfile.TemporaryDirectory() as d:
-        full = _spark_log_rows(run_crawl(spark, seeds, 3, f"{d}/full", off))
-        run_crawl(spark, seeds, 2, f"{d}/mix", off)
-        io = run_crawl(spark, seeds, 3, f"{d}/mix", CFG, resume=True)
-        assert _spark_log_rows(io) == full
-        assert io.read_snapshot("seen_filter").count() == CFG.n_buckets
-
-
-def test_cuckoo_filter_crawl_equals_bloom(spark):
-    """filter_kind='cuckoo' is a drop-in AMQ: fetch log + seen set must be
-    byte-identical to the bloom crawl (and hence to the oracle), including
-    through the auto-sizer (tiny m_slots forces a mid-crawl regeneration)."""
-    seeds = synth.gen_seeds(60)
-    ck = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=4,
-                     filter_kind="cuckoo", m_slots=16)  # forces auto-resize
-    with tempfile.TemporaryDirectory() as d:
-        io_ck = run_crawl(spark, seeds, 3, f"{d}/ck", ck)
-        io_bl = run_crawl(spark, seeds, 3, f"{d}/bl", CFG)
-        assert _spark_log_rows(io_ck) == _spark_log_rows(io_bl)
-        a = {r["canon_url"]: r["disc_seq"] for r in io_ck.read_log("seen").collect()}
-        b = {r["canon_url"]: r["disc_seq"] for r in io_bl.read_log("seen").collect()}
-        assert a == b
-        c = io_ck.counters()
-        assert c["filter_kind"] == "cuckoo"
-        assert c["filter_m_slots"] > 16, "cuckoo auto-sizer never fired"
-        assert io_ck.read_snapshot("seen_filter").filter("kind != 'cuckoo'").count() == 0
-
-
-def test_expire_recrawl_cuckoo_streams_deletes(spark):
-    """Cuckoo expiry: the expired hashes are DELETED from the existing
-    blobs (O(expired), no O(seen) rebuild) — expired URLs then pass the
-    probe as new, retained URLs still probe maybe-seen (deletion is
-    copy-safe, no false negatives), and the continued crawl matches the
-    bloom-expiry continuation exactly."""
-    from croawl_spark.operators.seenfilter import probe_cuckoo, probe_filter
-    from croawl_spark.plans.maintenance import expire_recrawl
-
-    seeds = synth.gen_seeds(60)
-    ck = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=16, filter_kind="cuckoo")
-
-    def crawl_expire_continue(d, cfg, probe):
-        io = run_crawl(spark, seeds, 3, d, cfg)
-        stats = expire_recrawl(spark, io, ttl=2, cfg=cfg)
-        assert stats["expired"] > 0
-        counters = io.counters()
-        nb = int(counters["filter_n_buckets"])
-        geo = int(counters.get("filter_m_slots", counters.get("filter_m_bits", 0)))
-        filt = io.read_snapshot("seen_filter")
-        log = io.read_log("fetch_log")
-        expired = (
-            log.groupBy("url_hash", "canon_url").agg(F.max("cycle").alias("lc"))
-            .filter("lc <= 0").select("url_hash", "canon_url")
-        )
-        retained = io.read_log("seen")
-        # expired URLs probe definitely-new; retained have no false negatives
-        assert probe(expired, filt, nb, geo).filter(F.col("maybe_seen")).count() == 0
-        assert (
-            probe(retained.select("url_hash"), filt, nb, geo)
-            .filter(~F.col("maybe_seen")).count() == 0
-        )
-        io = run_crawl(spark, seeds, 6, d, cfg, resume=True)
-        return _spark_log_rows(io)
-
-    with tempfile.TemporaryDirectory() as d:
-        got = crawl_expire_continue(f"{d}/ck", ck, probe_cuckoo)
-        want = crawl_expire_continue(f"{d}/bl", CFG, probe_filter)
-        assert got == want
 
 
 def test_tableio_merge_semantics(spark, tmp_path):

@@ -146,86 +146,6 @@ def test_bloom_no_false_negatives(spark):
     assert fresh > 800
 
 
-def test_cuckoo_insert_probe_delete(spark):
-    import random
-
-    from pyspark.sql import functions as F
-
-    from croawl_spark.operators.seenfilter import build_cuckoo_filter, probe_cuckoo
-
-    rnd = random.Random(11)
-    hashes = [rnd.randint(-(2**63), 2**63 - 1) for _ in range(3000)]
-    seen = spark.createDataFrame([(h,) for h in hashes], "url_hash long")
-    filt = build_cuckoo_filter(seen, n_buckets=8, m_slots=1 << 10)
-    cand = spark.createDataFrame(
-        [(h, i < len(hashes)) for i, h in enumerate(
-            hashes + [rnd.randint(-(2**63), 2**63 - 1) for _ in range(1500)])],
-        "url_hash long, was_inserted boolean",
-    )
-    probed = probe_cuckoo(cand, filt, n_buckets=8, m_slots=1 << 10)
-    assert probed.filter(F.col("was_inserted") & ~F.col("maybe_seen")).count() == 0
-    assert probed.filter(~F.col("was_inserted") & ~F.col("maybe_seen")).count() > 1400
-
-    # deletion: remove a third; remaining items must still have no FNs,
-    # deleted ones mostly absent
-    dels = spark.createDataFrame([(h,) for h in hashes[:1000]], "url_hash long")
-    filt2 = build_cuckoo_filter(
-        spark.createDataFrame([], "url_hash long"),
-        n_buckets=8, m_slots=1 << 10, existing=filt, deletes=dels,
-    )
-    remaining = spark.createDataFrame(
-        [(h, True) for h in hashes[1000:]] + [(h, False) for h in hashes[:1000]],
-        "url_hash long, still_in boolean",
-    )
-    p2 = probe_cuckoo(remaining, filt2, n_buckets=8, m_slots=1 << 10)
-    assert p2.filter(F.col("still_in") & ~F.col("maybe_seen")).count() == 0
-    deleted_still_maybe = p2.filter(~F.col("still_in") & F.col("maybe_seen")).count()
-    assert deleted_still_maybe < 50  # only fp-collision residue
-
-
-def test_cuckoo_overflow_raises_not_silently_drops(spark):
-    """Driving a bucket past its eviction capacity must FAIL LOUDLY: a
-    silently dropped insert would be a false negative for a present item."""
-    import random
-
-    import pytest as _pytest
-
-    from croawl_spark.operators.seenfilter import build_cuckoo_filter
-
-    rnd = random.Random(3)
-    # 8 buckets x (16 rows x 4 slots) = 512 capacity; 2000 inserts overflow
-    hashes = [rnd.randint(-(2**63), 2**63 - 1) for _ in range(2000)]
-    seen = spark.createDataFrame([(h,) for h in hashes], "url_hash long")
-    filt = build_cuckoo_filter(seen, n_buckets=8, m_slots=1 << 4)
-    with _pytest.raises(Exception, match="cuckoo bucket .* overflow"):
-        filt.collect()
-
-
-def test_cuckoo_delete_then_reinsert_in_one_delta(spark):
-    """With a shared op sequence, delete-then-reinsert of the same hash in
-    one delta nets to PRESENT (ops applied in logical order, not
-    inserts-first)."""
-    from pyspark.sql import functions as F
-
-    from croawl_spark.operators.seenfilter import build_cuckoo_filter, probe_cuckoo
-
-    base = spark.createDataFrame([(h,) for h in (111, 222, 333)], "url_hash long")
-    filt = build_cuckoo_filter(base, n_buckets=4, m_slots=1 << 8)
-    # delta: seq 0 deletes 222, seq 1 re-inserts 222
-    dels = spark.createDataFrame([(222, 0)], "url_hash long, seq long")
-    ins = spark.createDataFrame([(222, 1)], "url_hash long, seq long")
-    filt2 = build_cuckoo_filter(
-        ins, n_buckets=4, m_slots=1 << 8, existing=filt, deletes=dels,
-        seen_seq="seq", deletes_seq="seq",
-    )
-    cand = spark.createDataFrame([(222,), (111,)], "url_hash long")
-    probed = {r["url_hash"]: r["maybe_seen"]
-              for r in probe_cuckoo(cand, filt2, n_buckets=4, m_slots=1 << 8).collect()}
-    assert probed[222] is True and probed[111] is True
-    n = filt2.agg(F.sum("n_items")).collect()[0][0]
-    assert n == 3  # -1 delete +1 reinsert nets to the original count
-
-
 def test_canonicalize_fast_path_equivalence():
     """The vectorized fast path in canonicalize_udf must admit ONLY
     fixed points of canonicalize_url."""

@@ -17,14 +17,7 @@ from hypothesis import strategies as st
 
 from croawl_spark.functions.extract import span_fingerprint
 from croawl_spark.functions.urls import canonicalize_url
-from croawl_spark.operators.seenfilter import (
-    _ck_fp,
-    _ck_i1,
-    _CuckooTable,
-    _positions,
-    _set_bits,
-    _test_bits,
-)
+from croawl_spark.operators.seenfilter import _positions, _set_bits, _test_bits
 
 # -- F3 canonicalization ------------------------------------------------------
 
@@ -89,45 +82,6 @@ def test_bloom_kernel_no_false_negatives(inserted, probes, m_log2):
     assert _test_bits(bits, _positions(ins, m)).all()  # FN impossible
     if probes:
         _ = _test_bits(bits, _positions(np.array(probes, dtype=np.int64), m))
-
-
-# -- A6 cuckoo kernel ---------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(
-    items=st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=200, unique=True),
-    m_log2=st.integers(7, 10),
-)
-def test_cuckoo_kernel_roundtrip(items, m_log2):
-    ck = _CuckooTable(1 << m_log2)
-    arr = np.array(items, dtype=np.int64)
-    ok = [ck.insert(int(h)) for h in items]
-    if all(ok):  # low load by construction; overflow only at tiny m + max n
-        assert ck.contains_many(arr).all()  # no false negatives for present
-    # delete everything that went in; deletes must report success
-    for h, inserted in zip(items, ok):
-        if inserted:
-            assert ck.delete(int(h))
-
-
-def test_cuckoo_delete_is_copy_safe_under_fp_collision():
-    """The expiry path's safety claim: two DISTINCT hashes that collide on
-    (fingerprint, primary bucket) each insert their own fingerprint copy,
-    so deleting one cannot unmark the other — no false negative for the
-    retained item. (fp = bits 40-55, i1 = low log2(m) bits; flipping an
-    unused middle bit builds a guaranteed collider.)"""
-    m = 1 << 10
-    h1 = 0x123456789ABCDEF
-    h2 = h1 ^ (1 << 20)  # same fp (bits 40+), same i1 (low 10 bits)
-    arr = np.array([h1, h2], dtype=np.int64)
-    assert (_ck_fp(arr)[0] == _ck_fp(arr)[1]) and (_ck_i1(arr, m)[0] == _ck_i1(arr, m)[1])
-    ck = _CuckooTable(m)
-    assert ck.insert(h1) and ck.insert(h2)
-    assert ck.contains_many(arr).all()
-    assert ck.delete(h1)
-    assert ck.contains_many(np.array([h2], dtype=np.int64)).all(), (
-        "deleting h1 removed h2's copy — copy-safety broken"
-    )
 
 
 # -- V1 span fingerprint ------------------------------------------------------

@@ -1655,8 +1655,9 @@ def test_minhash_pairs_driver_local_equals_distributed(spark):
     self-join's rows — same signatures (computed distributed either way),
     same candidate set (band-slice tuple equality == band-hash equality),
     same est_sim doubles (#equal/n_perm is float64-exact). Covers planted
-    exact duplicates, a non-default (n_perm, n_bands) geometry, and an
-    empty-pair corpus."""
+    exact duplicates, a non-default (n_perm, n_bands) geometry, an
+    empty-pair corpus, and duplicate ids (the local path must decline:
+    the distributed join's strict id_a < id_b emits no (x, x) pair)."""
     from croawl_spark.operators.minhash import minhash_dedup_pairs
 
     docs = spark.read.parquet(
@@ -1666,25 +1667,28 @@ def test_minhash_pairs_driver_local_equals_distributed(spark):
         (F.col("doc_id") + 70000).alias("doc_id"), "text"
     )
     d = docs.unionByName(dup)
+    dup_ids = docs.unionByName(docs.filter(F.col("doc_id") < 3))
 
-    for kw in (
-        dict(threshold=0.5),
-        dict(threshold=0.7, n_perm=8, n_bands=2),
-        dict(threshold=1.01),  # no pair can pass: empty output both ways
+    for data, kw in (
+        (d, dict(threshold=0.5)),
+        (d, dict(threshold=0.7, n_perm=8, n_bands=2)),
+        (d, dict(threshold=1.01)),  # no pair can pass: empty output both ways
+        (dup_ids, dict(threshold=0.5)),
     ):
         loc = sorted(
-            map(tuple, minhash_dedup_pairs(d, "doc_id", "text", **kw).collect())
+            map(tuple, minhash_dedup_pairs(data, "doc_id", "text", **kw).collect())
         )
         dist = sorted(
             map(
                 tuple,
                 minhash_dedup_pairs(
-                    d, "doc_id", "text", driver_local_max_sigs=-1, **kw
+                    data, "doc_id", "text", driver_local_max_sigs=-1, **kw
                 ).collect(),
             )
         )
         assert loc == dist, kw
-        if kw["threshold"] <= 0.5:
+        assert all(a != b for a, b, _ in loc), kw
+        if data is d and kw["threshold"] <= 0.5:
             planted = {(i, i + 70000) for i in range(6)}
             assert planted <= {(a, b) for a, b, _ in loc}
 
@@ -1726,7 +1730,8 @@ def test_resample_sources_driver_local_equals_distributed(spark):
     emit EXACTLY the distributed prefilter + salted-rank machinery's kept
     set — same quotas (identical IEEE math on identical counts), same
     (md5, id) rank — for integer AND string ids, including a keep-all
-    source and a weighted-but-absent-source mix."""
+    source and a weighted-but-absent-source mix. Both paths return docs'
+    column order."""
     from croawl_spark.operators.corpus import resample_sources
 
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -1734,42 +1739,28 @@ def test_resample_sources_driver_local_equals_distributed(spark):
         {"en": 0.5, "zh": 0.25, "es": 0.25},
         {"en": 0.3, "zh": 0.7},
         {"en": 1.0, "fr": 0.5},  # fr absent from the data: ignored
+        # both quotas floor below their counts (fr: 63 of 64): no keep-all
+        # source, so the distributed path's using-join order shows
+        {"en": 0.05, "fr": 0.95},
     ):
-        loc = sorted(
-            map(
-                tuple,
-                resample_sources(d, "doc_id", "lang", w)
-                .select("doc_id", "lang")
-                .collect(),
-            )
-        )
-        dist = sorted(
-            map(
-                tuple,
-                resample_sources(
-                    d, "doc_id", "lang", w, driver_local_max_docs=-1
-                )
-                .select("doc_id", "lang")
-                .collect(),
-            )
-        )
+        loc_df = resample_sources(d, "doc_id", "lang", w)
+        dist_df = resample_sources(d, "doc_id", "lang", w, driver_local_max_docs=-1)
+        assert loc_df.columns == dist_df.columns == d.columns, w
+        loc = sorted(map(tuple, loc_df.select("doc_id", "lang").collect()))
+        dist = sorted(map(tuple, dist_df.select("doc_id", "lang").collect()))
         assert loc == dist and len(loc) > 0, w
 
     sd = d.select(
         F.concat(F.lit("d:"), F.col("doc_id").cast("string")).alias("sid"),
         "lang",
     )
-    loc = sorted(
-        map(tuple, resample_sources(sd, "sid", "lang", {"en": 0.4, "zh": 0.6}).collect())
+    loc_df = resample_sources(sd, "sid", "lang", {"en": 0.4, "zh": 0.6})
+    dist_df = resample_sources(
+        sd, "sid", "lang", {"en": 0.4, "zh": 0.6}, driver_local_max_docs=-1
     )
-    dist = sorted(
-        map(
-            tuple,
-            resample_sources(
-                sd, "sid", "lang", {"en": 0.4, "zh": 0.6}, driver_local_max_docs=-1
-            ).collect(),
-        )
-    )
+    assert loc_df.columns == dist_df.columns == sd.columns
+    loc = sorted(map(tuple, loc_df.collect()))
+    dist = sorted(map(tuple, dist_df.collect()))
     assert loc == dist and len(loc) > 0
 
 
