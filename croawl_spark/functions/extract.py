@@ -9,7 +9,9 @@ Pinned extraction semantics (FIXTURES.md §3, mirrored by the oracle):
   * oai_endpoint: first <link>/<a> href containing 'verb=Identify' or a
     path segment '/oai'
   * outlinks: every <a href=...> in document order
-  * distractor tags (citation_*, og:*) are NOT extracted
+  * distractor tags (citation_*, og:*) are NOT extracted; a <meta> whose
+    raw attribute text has no 'dc.' (any case) cannot name a dc.* field,
+    so its attributes are never parsed — the bulk of a tag-dense page
 
 Spark-side this runs inside mapInPandas over Arrow batches (zero per-row
 JVM crossings); the pure functions below are the single source of truth.
@@ -58,7 +60,10 @@ def extract_from_html(html: str) -> dict:
     outlinks: list[str] = []
     for m in _TAG_RE.finditer(html):
         tag = m.group(1).lower()
-        a = _attrs(m.group(2))
+        raw = m.group(2)
+        if tag == "meta" and "dc." not in raw.lower():
+            continue
+        a = _attrs(raw)
         if tag == "meta":
             name = (a.get("name") or "").lower()
             content = a.get("content")

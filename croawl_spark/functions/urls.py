@@ -15,10 +15,14 @@ engine and oracle cannot drift. They are an RFC 3986 §6 normalization subset:
      landing pages where query order is significant); empty "?" dropped
   8. userinfo preserved as-is (rare; never part of host matching)
 
-Spark-side, canonicalization is a *vectorized* pandas UDF — Arrow batches,
-no per-row JVM<->Python crossing (BASELINE.json input_hint: "no per-row
-Python"). Host extraction and hashing use pure built-ins (parse_url /
-xxhash64) so they stay inside whole-stage codegen.
+Spark-side there is no per-row JVM<->Python crossing (BASELINE.json
+input_hint: "no per-row Python"). The crawl cycle canonicalizes outlinks
+with ``canonicalize_url`` inside its fused fetch+parse pass, where the
+links are already Python strings; the *vectorized* pandas UDF
+(``canon``, Arrow batches) serves DataFrame columns — the bootstrap's
+seeds and the verify_queries battery. Host extraction and hashing use
+pure built-ins (parse_url / xxhash64) so they stay inside whole-stage
+codegen.
 """
 
 from __future__ import annotations

@@ -12,12 +12,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from croawl_spark.operators.ranking import global_sequence  # noqa: F401 (re-export family)
+from croawl_spark.operators.ranking import (  # noqa: F401 (re-export family)
+    global_sequence,
+    partition_offsets,
+    range_partitions,
+)
 
 # (id, n_tokens) frames at or below this many rows run the pack_sequences
 # cumsum driver-local (two int64 columns ≈ 32 MB through Arrow at the gate)
-# instead of paying the range-partition sample + offset-collect + window
-# chain of Spark jobs. Same collect-gate pattern as cluster.py §r06 /
+# instead of paying the range-partition sample + observed checkpoint +
+# window chain of Spark jobs. Same collect-gate pattern as cluster.py §r06 /
 # ann.py §r06; above the gate (or for non-integer/NULL/duplicate ids) the
 # distributed two-phase cumsum below is unchanged — it remains the 100-TB
 # path.
@@ -93,54 +97,25 @@ def global_cumsum(
     order — without the single-partition window that makes the naive
     ``SUM() OVER (ORDER BY ...)`` a serial bottleneck at scale.
 
-    Two-phase, mirroring ranking.global_sequence: range-partition on the
-    order columns (parallel sort), take each partition's value sum (an
-    O(#partitions) collect), then cumsum within partitions plus the exact
-    offset of all earlier partitions. Output depends only on the data
-    (order_cols must be a total order); range boundaries affect placement,
-    never values. value_col must be integral — offsets stay exact.
+    Two-phase, sharing ranking.global_sequence's offsets: range-partition
+    on the order columns and read each partition's value sum from the same
+    checkpoint job (ranking.range_partitions), then cumsum within
+    partitions plus the exact offset of all earlier partitions. Output
+    depends only on the data (order_cols must be a total order); range
+    boundaries affect placement, never values. value_col must be
+    integral — offsets stay exact.
     """
-    spark = df.sparkSession
     if n_parts is None:
-        n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    parted = df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-    parted = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    sums = {
-        r["_pid"]: r["s"]
-        for r in parted.groupBy("_pid")
-        .agg(F.coalesce(F.sum(value_col), F.lit(0)).cast("long").alias("s"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += int(sums[pid])
-    # pandas + Arrow -> a JVM LocalTableScan instead of a pickled-RDD scan
-    # (same fix as ranking.global_sequence, r06)
-    import pandas as pd
-
-    if offsets:
-        off_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"_pid": list(offsets), "_off": [offsets[p] for p in offsets]}
-            ),
-            schema="_pid int, _off long",
-        )
-    else:
-        off_df = spark.range(0).select(
-            F.col("id").cast("int").alias("_pid"), F.col("id").alias("_off")
-        )
-    off_df = F.broadcast(off_df)
+        n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    parted, sums = range_partitions(df, order_cols, F.col(value_col), n_parts)
     w = (
         Window.partitionBy("_pid")
-        .orderBy(*[F.col(c) for c in order_cols])
+        .orderBy("_pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        parted.join(off_df, "_pid")
-        .withColumn(out_col, (F.sum(value_col).over(w) + F.col("_off")).cast("long"))
-        .drop("_pid", "_off")
-    )
+    return parted.withColumn(
+        out_col, (F.sum(value_col).over(w) + partition_offsets(sums)).cast("long")
+    ).drop("_pid", "_pos")
 
 
 def pack_sequences(
@@ -837,7 +812,7 @@ def shard_assign(
 
     -> (id, seq, shard_id). Feed to :func:`export_shards` to write.
     """
-    seq = global_sequence(docs.select(F.col(id_col)), [id_col], "seq")
+    seq, _ = global_sequence(docs.select(F.col(id_col)), [id_col], "seq")
     return seq.withColumn(
         "shard_id", F.floor(F.col("seq") / F.lit(docs_per_shard)).cast("long")
     )

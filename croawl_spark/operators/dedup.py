@@ -7,7 +7,7 @@ explicit min-by over a total order — identical result at any parallelism.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -427,27 +427,46 @@ def mark_content_dups(
     -> (docs + is_content_dup: boolean, content_seen_delta) where the delta
     holds one (content_hash, first_<order_col>) row per NEWLY seen hash —
     append it to the log exactly like the URL seen log (O(delta)/cycle).
+    ``order_col`` must be unique within a hash (a total order), or tied
+    first rows would each count as the first.
     Note: 64-bit hash collisions mark false duplicates at ~birthday(2^64)
     odds; callers needing exactness re-check span_fingerprint equality on
     flagged rows (the two-level exact_dedup pattern).
     """
-    firsts = docs.groupBy(hash_col).agg(F.min(order_col).alias("_first_seq"))
+    # ONE shuffle: the batch rows and the log's hashes are unioned and
+    # windowed by hash, so every row learns its group's first order value
+    # and whether the log holds its hash in place — no aggregate that is
+    # joined back to the rows (three more exchanges)
+    rows = docs.withColumn("_log", F.lit(False))
     if content_seen is not None:
-        firsts = firsts.join(
-            content_seen.select(hash_col), hash_col, "left_anti"
+        rows = rows.unionByName(
+            content_seen.select(
+                *[
+                    F.col(c) if c == hash_col
+                    else F.lit(None).cast(docs.schema[c].dataType).alias(c)
+                    for c in docs.columns
+                ],
+                F.lit(True).alias("_log"),
+            )
         )
-    if eager:
-        # both returned frames consume `firsts` and are typically written
-        # to two different sinks — materialize the narrow aggregate once
-        # (r06: the crawl cycle paid the groupBy + anti-join twice per
-        # cycle, once per sink; localCheckpoint blocks free on GC)
-        firsts = firsts.localCheckpoint()
-    delta = firsts.select(
-        hash_col, F.col("_first_seq").alias(f"first_{order_col}")
+    w = Window.partitionBy(hash_col)
+    first = F.min(F.when(~F.col("_log"), F.col(order_col))).over(w)
+    flagged = (
+        rows.withColumn(
+            "is_content_dup",
+            F.max("_log").over(w) | (F.col(order_col) != first),
+        )
+        .filter(~F.col("_log"))
+        .drop("_log")
     )
-    flagged = docs.join(firsts, hash_col, "left").withColumn(
-        "is_content_dup", F.col("_first_seq").isNull() | (F.col(order_col) != F.col("_first_seq"))
-    ).drop("_first_seq")
+    if eager:
+        # both returned frames are typically written to two different
+        # sinks — materialize the window once (localCheckpoint blocks free
+        # on GC)
+        flagged = flagged.localCheckpoint()
+    delta = flagged.filter(~F.col("is_content_dup")).select(
+        hash_col, F.col(order_col).alias(f"first_{order_col}")
+    )
     return flagged, delta
 
 

@@ -57,6 +57,66 @@ def salted_topk(
     )
 
 
+def range_partitions(
+    df: DataFrame,
+    order_cols: list[str],
+    value: Column,
+    n_parts: int,
+) -> tuple[DataFrame, list[int]]:
+    """Range-partition ``df`` on ``order_cols`` (a total order), sort each
+    partition, and checkpoint the result once. The checkpoint job itself
+    reads the per-partition sum of the integral ``value``: an ``observe``
+    with one conditional sum per partition id (``n_parts`` is fixed), so
+    no count job and no collect follow it.
+
+    -> (parted, sums). ``parted`` carries ``_pid`` (its partition) and
+    ``_pos`` (the 0-based position inside that partition, in order);
+    ``sums[i]`` is the sum of ``value`` over partition ``i``. Partition
+    ``i`` holds a contiguous range of the order that precedes partition
+    ``i + 1``'s, so the rows before a row in the global order are the
+    rows of the earlier partitions plus ``_pos`` rows of its own.
+    """
+    from pyspark.sql import Observation
+
+    cols = [F.col(c) for c in order_cols]
+    pid = F.col("_pid")
+    obs = Observation()
+    parted = (
+        df.repartitionByRange(n_parts, *cols)
+        .sortWithinPartitions(*cols)
+        .withColumn("_pid", F.spark_partition_id())
+        # monotonically_increasing_id is (partition << 33) + row index in
+        # the partition: minus the partition part it is the in-partition
+        # position, which the sort above makes a pure function of the data
+        .withColumn(
+            "_pos",
+            F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33),
+        )
+        .observe(
+            obs,
+            *[
+                F.sum(F.when(pid == i, value).otherwise(0)).alias(f"p{i}")
+                for i in range(n_parts)
+            ],
+        )
+        .localCheckpoint()
+    )
+    got = obs.get
+    return parted, [int(got[f"p{i}"] or 0) for i in range(n_parts)]
+
+
+def partition_offsets(sums: list[int], start: int = 0) -> Column:
+    """Exclusive prefix sums of ``sums`` (plus ``start``) as a literal
+    array, looked up by ``_pid``: the total of all earlier partitions."""
+    offs, acc = [], start
+    for s in sums:
+        offs.append(acc)
+        acc += s
+    return F.element_at(
+        F.array(*[F.lit(o).cast("long") for o in offs]), F.col("_pid") + 1
+    )
+
+
 def global_sequence(
     df: DataFrame,
     order_cols: list[str],
@@ -64,16 +124,26 @@ def global_sequence(
     start: int = 0,
     n_parts: int | None = None,
     eager_input: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Cluster-size-invariant global sequence: dense rank over a total order,
     computed WITHOUT a single-partition window.
 
-    Two-phase: range-partition on the order columns (parallel sort), count
-    rows per range partition (tiny collect), then rank within each partition
-    plus the cumulative offset of earlier partitions. The result depends only
-    on the data (order_cols must be a total order) — range boundaries chosen
-    by sampling affect task placement, never the output. NEVER
-    ``monotonically_increasing_id`` (partition-dependent values).
+    Range-partition on the order columns (parallel sort) and read each
+    partition's row count from the same checkpoint job
+    (:func:`range_partitions`); a row's sequence is ``start`` plus the
+    rows of earlier partitions plus its position in its own. No window,
+    no join, no exchange after the range partition. The result depends
+    only on the data (order_cols must be a total order) — range
+    boundaries chosen by sampling affect task placement, never the
+    output. -> (df + seq_name, number of rows).
+
+    The output is coalesced (narrow: neighbouring ranges merge) so that no
+    partition holds less than one Arrow batch of rows
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``) — the partition
+    sizing AQE gives a shuffle read, which no shuffle follows here to
+    give. A smaller partition is only a task's overhead, and a Python
+    consumer (the crawl's fetch) or a writer (one file per partition)
+    pays it per partition.
 
     ``eager_input`` (r06): the range exchange SAMPLES its child to pick
     boundaries, so the segment of the input plan above its last shuffle
@@ -86,38 +156,10 @@ def global_sequence(
         df = df.localCheckpoint()
     if n_parts is None:
         n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    parted = df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-    parted = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    counts = {
-        r["_pid"]: r["n"]
-        for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # pandas + Arrow -> a JVM LocalTableScan; a plain python list would go
-    # through applySchemaToPythonRDD, adding a pickled-RDD scan (and its
-    # Python-worker tasks) to every sequence call (r06, seen in the crawl
-    # event log)
-    import pandas as pd
-
-    if offsets:
-        off_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"_pid": list(offsets), "_off": [offsets[p] for p in offsets]}
-            ),
-            schema="_pid int, _off long",
-        )
-    else:  # empty input: a pure-JVM empty relation (empty pandas falls
-        # back to the pickled-RDD path)
-        off_df = spark.range(0).select(
-            F.col("id").cast("int").alias("_pid"), F.col("id").alias("_off")
-        )
-    off_df = F.broadcast(off_df)
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        parted.join(off_df, "_pid")
-        .withColumn(seq_name, (F.row_number().over(w) + F.col("_off") - 1).cast("long"))
-        .drop("_pid", "_off")
-    )
+    parted, counts = range_partitions(df, order_cols, F.lit(1), n_parts)
+    n = sum(counts)
+    per_part = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    seq = (partition_offsets(counts, start) + F.col("_pos")).cast("long")
+    out = parted.withColumn(seq_name, seq).drop("_pid", "_pos")
+    # a non-positive batch size means "no limit": one partition
+    return out.coalesce(max(1, -(-n // per_part) if per_part > 0 else 1)), n

@@ -26,8 +26,9 @@ seen-set are the driver's correctness gate):
     4. fetch (V6): deterministic gen_page per canon_url -> status, kind,
        bytes, interleaved spans. fetched_at = BASE_TIME + t seconds.
     5. parse (V3): DC/OAI metadata + outlinks from text spans in offset
-       order. doc_id = canon_url.
-    6. frontier update: outlinks -> canonicalize -> first-wins per canon_url
+       order, each outlink canonicalized in the same Python pass.
+       doc_id = canon_url.
+    6. frontier update: canonical outlinks -> first-wins per canon_url
        by (parent fetch_seq, link position) -> exact anti-join against
        seen on (url_hash, canon_url) -> assign
        disc_seq = next_disc_seq counter + rank over (parent_fetch_seq,
@@ -40,6 +41,12 @@ seen-set are the driver's correctness gate):
 Determinism discipline: every rank/sequence derives from data columns
 (depth, disc_seq, fetch_seq, link_pos) — never partition ids, never wall
 clock — so local[8] and local[32] produce byte-identical fetch logs.
+
+Serial-path discipline: at crawl-cycle sizes the cycle is bound by the
+count of Spark jobs, not by data. Scalars the cycle needs (rows
+scheduled, new URLs, pages parsed, spans) come from the jobs that already
+run — the sequence checkpoints and an observe on the fetch — never from a
+count or collect of their own.
 """
 
 from __future__ import annotations
@@ -90,7 +97,8 @@ class CrawlConfig:
 
 
 # ---------------------------------------------------------------------------
-# vectorized stages (the four sanctioned Python boundaries)
+# vectorized stages (the Python boundaries: fused fetch+parse, robots;
+# bootstrap also canonicalizes its seeds with the urls.canon pandas UDF)
 # ---------------------------------------------------------------------------
 
 _FETCH_OUT = StructType(
@@ -117,6 +125,7 @@ _FETCH_PARSE_OUT = StructType(
         StructField("dc_identifier", StringType()),
         StructField("oai_endpoint", StringType()),
         StructField("outlinks", ArrayType(StringType())),
+        StructField("outlinks_canon", ArrayType(StringType())),
         StructField("n_spans", IntegerType()),
         StructField("content_hash", LongType()),
     ]
@@ -147,11 +156,14 @@ def _fetch_stage(batch: DataFrame) -> DataFrame:
     crossing. The page spans are python objects right after gen_page, so
     extraction runs on them in place — shipping spans to the JVM and a
     reassembled HTML string back to python (the unfused shape) would double
-    the crossings for zero benefit. The standalone parse path for existing
-    documents tables lives in plans/extract.py."""
+    the crossings for zero benefit. The same pass canonicalizes each
+    outlink (``outlinks_canon``, index-aligned with ``outlinks``), so the
+    links need no second Python stage. The standalone parse path for
+    existing documents tables lives in plans/extract.py."""
 
     def fetch_parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from croawl_spark.functions.extract import extract_all
+        from croawl_spark.functions.urls import canonicalize_url
 
         for pdf in it:
             pages = pdf["canon_url"].map(synth.gen_page)
@@ -171,6 +183,10 @@ def _fetch_stage(batch: DataFrame) -> DataFrame:
             out["dc_identifier"] = [e["dc_identifier"] if e else None for e in exs]
             out["oai_endpoint"] = [e["oai_endpoint"] if e else None for e in exs]
             out["outlinks"] = [e["outlinks"] if e else None for e in exs]
+            out["outlinks_canon"] = [
+                [canonicalize_url(u) for u in e["outlinks"]] if e else None
+                for e in exs
+            ]
             out["n_spans"] = pages.map(lambda p: len(p["spans"])).astype("int32")
             out["content_hash"] = pages.map(
                 lambda p: _content_hash(p["spans"])
@@ -238,13 +254,15 @@ def bootstrap(
         .filter(F.col("canon_url").isNotNull())
     )
     ded = first_wins(canon, "canon_url", ["seed_seq"])
+    frontier, n_seeds = global_sequence(
+        ded, ["seed_seq"], "disc_seq", start=0,
+        eager_input=True,  # r06: the range-boundary sample pass otherwise
+        # re-runs the seed-gen mapInPandas + canon UDF + first_wins dedup
+        # chain a second time (same fix as the two run_cycle call sites;
+        # values unaffected)
+    )
     frontier = (
-        global_sequence(ded, ["seed_seq"], "disc_seq", start=0,
-                        eager_input=True)  # r06: the range-boundary sample
-        # pass otherwise re-runs the seed-gen mapInPandas + canon UDF +
-        # first_wins dedup chain a second time (same fix as the two
-        # run_cycle call sites; values unaffected)
-        .select(
+        frontier.select(
             "url",
             "canon_url",
             U.url_hash("canon_url").alias("url_hash"),
@@ -256,10 +274,9 @@ def bootstrap(
             F.lit(0).cast("int").alias("added_cycle"),
         )
     )
-    # materialize once: frontier feeds 3-4 sinks below; without this the
-    # canonicalization UDF + dedup window re-execute per sink
-    frontier = frontier.persist()
-    n_seeds = frontier.count()
+    # frontier feeds 3-4 sinks below; the sequence checkpoint already holds
+    # the canonicalized, deduped rows, so each sink re-runs only the
+    # projection above (hash + host parse), never the canon UDF or dedup
     # seen records EVERY discovered canonical URL (robots-denied included —
     # they must never be re-processed); the frontier holds only allowed rows
     seen = frontier.select("url_hash", "canon_url", "disc_seq")
@@ -277,7 +294,6 @@ def bootstrap(
         frontier_tables + ["seen", "host_state"],
         counters={"total_fetches": 0, "next_disc_seq": int(n_seeds)},
     )
-    frontier.unpersist()
     host_state.unpersist()
 
 
@@ -333,18 +349,34 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         n_salt=cfg.n_salt,
     )
     fetch_base = int(counters.get("total_fetches", 0))
-    batch = global_sequence(
+    # the sequence output is a projection of its own checkpoint, so the
+    # batch is materialized once and n_sched comes with it (no count job)
+    batch, n_sched = global_sequence(
         batch.select("canon_url", "url_hash", "host", "depth", "disc_seq"),
         ["depth", "disc_seq"],
         "fetch_seq",
         start=fetch_base,
         eager_input=True,  # r06: don't re-run the top-k windows for the
         # range-boundary sample pass
-    ).localCheckpoint()
+    )
 
     # 4. fetch — persist: feeds fetch_log, documents AND parse; without it
-    # the synthetic fetch (at scale: the real fetch!) re-executes per sink
-    fetched = _fetch_stage(batch).persist()
+    # the synthetic fetch (at scale: the real fetch!) re-executes per sink.
+    # The parsed count and span sum ride on the first job that fills the
+    # cache (an observe), instead of a driver aggregate of their own.
+    from pyspark.sql import Observation
+
+    parsed_obs = Observation()
+    is_ok = F.col("status") == 200
+    fetched = (
+        _fetch_stage(batch)
+        .observe(
+            parsed_obs,
+            F.sum(F.when(is_ok, 1).otherwise(0)).alias("n"),
+            F.sum(F.when(is_ok, F.col("n_spans")).otherwise(0)).alias("s"),
+        )
+        .persist()
+    )
     fetched_at = F.lit(
         (BASE_TIME + _dt.timedelta(seconds=cycle)).strftime("%Y-%m-%d %H:%M:%S")
     ).cast("timestamp")
@@ -367,7 +399,7 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     )
 
     # 5. parse output (fused into the fetch stage — one Arrow crossing)
-    parsed = fetched.filter(F.col("status") == 200)
+    parsed = fetched.filter(is_ok)
 
     # 5b. content-seen test (Mercator-style, distinct from URL-seen):
     # mirrors/aliases serving identical pages get flagged. Only a NARROW
@@ -396,14 +428,23 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         "oai_endpoint",
     )
 
-    # 6. frontier update
-    links = parsed.select(
-        F.col("fetch_seq").alias("parent_fetch_seq"),
-        (F.col("depth") + 1).cast("int").alias("depth"),
-        F.posexplode_outer("outlinks").alias("link_pos", "url"),
-    ).filter(F.col("url").isNotNull())
+    # 6. frontier update: the fetch stage canonicalized every outlink in
+    # the same Python pass (outlinks_canon, index-aligned with outlinks)
     links = (
-        links.withColumn("canon_url", U.canon("url"))
+        parsed.select(
+            F.col("fetch_seq").alias("parent_fetch_seq"),
+            (F.col("depth") + 1).cast("int").alias("depth"),
+            F.posexplode(F.arrays_zip("outlinks", "outlinks_canon")).alias(
+                "link_pos", "_l"
+            ),
+        )
+        .select(
+            "parent_fetch_seq",
+            "depth",
+            "link_pos",
+            F.col("_l.outlinks").alias("url"),
+            F.col("_l.outlinks_canon").alias("canon_url"),
+        )
         .filter(F.col("canon_url").isNotNull())
         .withColumn("url_hash", U.url_hash("canon_url"))
         .withColumn("host", U.host_of("canon_url"))
@@ -412,12 +453,13 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     new_links = ded.join(seen, ["url_hash", "canon_url"], "left_anti")
 
     seen_base = int(counters.get("next_disc_seq", 0))
-    new_rows = global_sequence(
+    new_rows, n_new = global_sequence(
         new_links, ["parent_fetch_seq", "link_pos"], "disc_seq",
         start=seen_base,
         eager_input=True,  # r06: don't re-run the seen anti-join tail
         # for the range-boundary sample pass
-    ).select(
+    )
+    new_rows = new_rows.select(
         "url",
         "canon_url",
         "url_hash",
@@ -428,9 +470,6 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         F.lit("queued").alias("state"),
         F.lit(cycle).cast("int").alias("added_cycle"),
     )
-    new_rows = new_rows.localCheckpoint()
-
-    n_new = new_rows.count()
     # seen delta: ALL newly discovered URLs (denied ones included)
     seen_delta = new_rows.select("url_hash", "canon_url", "disc_seq")
 
@@ -452,29 +491,28 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
 
     # 7. metrics (per hash-bucket lineage) + checkpoint commit.
     # urls_scheduled/urls_parsed/spans_parsed are genuinely PER BUCKET (sum
-    # across partition_id = cycle totals); wall_ms is cycle-scoped and
-    # repeated per row — aggregate it with max(), never sum() — and is also
-    # committed as the last_cycle_wall_ms counter.
-    _cycle_wall_ms = int((_time.perf_counter() - _cycle_start) * 1000)
-    n_sched = batch.count()
-    n_parsed_df = parsed.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("n_spans"), F.lit(0)).alias("s")
-    ).collect()[0]
-    _bucket = F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("partition_id")
-    sched_b = batch.groupBy(_bucket).agg(F.count(F.lit(1)).alias("urls_scheduled"))
-    parsed_b = parsed.groupBy(_bucket).agg(
-        F.count(F.lit(1)).alias("urls_parsed"),
-        F.coalesce(F.sum("n_spans"), F.lit(0)).cast("long").alias("spans_parsed"),
-    )
+    # across partition_id = cycle totals); every scheduled row is in
+    # `fetched`, so one groupBy over it gives all three. wall_ms is the
+    # cycle's wall BEFORE the table writes and the commit, repeated per
+    # row — aggregate it with max(), never sum(); the committed
+    # last_cycle_wall_ms counter is the full wall, taken at the commit.
+    _pre_write_ms = int((_time.perf_counter() - _cycle_start) * 1000)
     metrics = (
-        sched_b.join(parsed_b, "partition_id", "full")
+        fetched.groupBy(
+            F.pmod("url_hash", F.lit(cfg.n_buckets)).cast("int").alias("partition_id")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("urls_scheduled"),
+            F.sum(F.when(is_ok, 1).otherwise(0)).alias("urls_parsed"),
+            F.sum(F.when(is_ok, F.col("n_spans")).otherwise(0)).alias("spans_parsed"),
+        )
         .select(
             F.lit(cycle).cast("int").alias("cycle"),
             "partition_id",
-            F.coalesce("urls_scheduled", F.lit(0)).cast("long").alias("urls_scheduled"),
-            F.coalesce("urls_parsed", F.lit(0)).cast("long").alias("urls_parsed"),
-            F.coalesce("spans_parsed", F.lit(0)).cast("long").alias("spans_parsed"),
-            F.lit(_cycle_wall_ms).cast("long").alias("wall_ms"),
+            F.col("urls_scheduled").cast("long").alias("urls_scheduled"),
+            F.col("urls_parsed").cast("long").alias("urls_parsed"),
+            F.col("spans_parsed").cast("long").alias("spans_parsed"),
+            F.lit(_pre_write_ms).cast("long").alias("wall_ms"),
             F.concat(F.lit(f"{cycle}:"), F.col("partition_id")).alias("lineage_ref"),
         )
     )
@@ -483,24 +521,23 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     # writes are independent of each other (each reads already-persisted /
     # checkpointed frames and writes its own segment directory; the cycle
     # becomes visible only at the single atomic manifest commit below), so
-    # they run from a small thread pool — the tail tasks of one write
-    # back-fill executor cores freed by another instead of serializing
-    # 8-9 jobs end to end. Grouping: the two sinks that re-read the
-    # persisted fetch output share a thread; host_state precedes frontier
-    # in its thread because new_allowed builds on the persisted
-    # host_state_next (written-first = materialized-once).
+    # they run from a thread pool — each write is a job or two of a few
+    # small tasks, so at crawl-cycle sizes the pool hides per-job driver
+    # latency and the tail tasks of one write back-fill cores freed by
+    # another. host_state precedes frontier in one thread because
+    # new_allowed builds on the persisted host_state_next (written-first =
+    # materialized-once); that chain is the longest, so it starts first.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _writes_fetch() -> None:
-        io.write_snapshot(fetch_log, "fetch_log", cycle)
-        io.write_snapshot(documents, "documents", cycle)
-
-    def _writes_side() -> None:
-        io.write_snapshot(metadata, "metadata", cycle)
-        io.write_snapshot(content_dups, "content_dups", cycle)
-        io.write_snapshot(cs_delta, "content_seen", cycle)
-        io.write_snapshot(metrics, "metrics", cycle)
-        io.write_snapshot(seen_delta, "seen", cycle)
+    sinks = [
+        (fetch_log, "fetch_log"),
+        (documents, "documents"),
+        (metadata, "metadata"),
+        (content_dups, "content_dups"),
+        (cs_delta, "content_seen"),
+        (metrics, "metrics"),
+        (seen_delta, "seen"),
+    ]
 
     def _writes_frontier() -> tuple[list[str], dict[str, list[int]] | None]:
         io.write_snapshot(host_state_next, "host_state", cycle)
@@ -539,21 +576,22 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         io.write_snapshot(frontier_next, "frontier", cycle)
         return (["frontier"], None)
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _f_fetch = _pool.submit(_writes_fetch)
-        _f_side = _pool.submit(_writes_side)
+    with ThreadPoolExecutor(max_workers=4) as _pool:
         _f_frontier = _pool.submit(_writes_frontier)
-        _f_fetch.result()
-        _f_side.result()
+        for f in [_pool.submit(io.write_snapshot, df, t, cycle) for df, t in sinks]:
+            f.result()
         frontier_tables, replace_tables = _f_frontier.result()
     committed = [
         "fetch_log", "documents", "metadata", "metrics",
         "seen", "host_state", "content_dups", "content_seen",
     ] + frontier_tables
+    # n_sched > 0 means a job has filled the fetched cache by now (the
+    # fetch_log write at the latest); with no batch nothing was fetched
+    parsed_n = parsed_obs.get if n_sched else {"n": 0, "s": 0}
     new_counters = {
         "total_fetches": fetch_base + n_sched,
-        "next_disc_seq": seen_base + int(n_new),
-        "last_cycle_wall_ms": _cycle_wall_ms,
+        "next_disc_seq": seen_base + n_new,
+        "last_cycle_wall_ms": int((_time.perf_counter() - _cycle_start) * 1000),
     }
     io.commit_cycle(cycle, committed, counters=new_counters, replace=replace_tables)
     if replace_tables:
@@ -561,8 +599,8 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
             io.prune_orphans(t)
     for df in (fetched, host_state_next):
         df.unpersist()
-    return {"cycle": cycle, "scheduled": n_sched, "parsed": int(n_parsed_df["n"]),
-            "spans": int(n_parsed_df["s"])}
+    return {"cycle": cycle, "scheduled": n_sched, "parsed": int(parsed_n["n"] or 0),
+            "spans": int(parsed_n["s"] or 0)}
 
 
 def run_crawl(

@@ -19,6 +19,15 @@ Snapshot tables (frontier/seen/host_state) read ONLY their
 latest committed cycle; log tables (fetch_log/documents/metadata/metrics)
 read the union of all committed cycles — partition pruning by ``cycle``
 comes free from the directory layout.
+
+Schemas are declared, never inferred (tables.py): each plain segment
+carries the schema it was written with in a ``_schema.json`` sidecar (the
+'_' prefix hides it from parquet readers; Iceberg keeps the same fact in
+its table metadata), and reads pass it to the parquet reader. Inferring
+it instead costs one Spark job per read (a footer scan), several per
+crawl cycle. Segments without a sidecar — written before it existed, or
+Hive-partitioned, whose partition columns live in directory names — are
+still read by inference.
 """
 
 from __future__ import annotations
@@ -29,8 +38,23 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 SNAPSHOT_TABLES = ("frontier", "seen", "host_state")
+_SCHEMA_FILE = "_schema.json"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every level nullable — what a parquet read reports."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class TableIO:
@@ -130,6 +154,9 @@ class TableIO:
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
+            if not partition_by:
+                with open(os.path.join(path, _SCHEMA_FILE), "w") as f:
+                    f.write(_nullable(df.schema).json())
             return
         n_files, bcols = bucket_by
         name = self._bucket_table_name(table, cycle)
@@ -170,7 +197,7 @@ class TableIO:
         path = self._dir(table, cycle)
         layout = os.path.join(path, "_bucket_layout.json")
         if not os.path.exists(layout):
-            return self.spark.read.parquet(path)
+            return self._parquet([path])
         with open(layout) as f:
             meta = json.load(f)
         name = meta["name"]
@@ -191,6 +218,21 @@ class TableIO:
                 self.spark.sql(f"MSCK REPAIR TABLE {name}")
         return self.spark.table(name)
 
+    def _parquet(self, dirs: list[str]) -> DataFrame:
+        """Plain parquet read of segment directories, with their recorded
+        schema when every one has the same; by inference otherwise."""
+        schemas = set()
+        for d in dirs:
+            try:
+                with open(os.path.join(d, _SCHEMA_FILE)) as f:
+                    schemas.add(f.read())
+            except FileNotFoundError:
+                return self.spark.read.parquet(*dirs)
+        if len(schemas) != 1:
+            return self.spark.read.parquet(*dirs)
+        schema = StructType.fromJson(json.loads(schemas.pop()))
+        return self.spark.read.schema(schema).parquet(*dirs)
+
     def read_snapshot(self, table: str, cycle: int | None = None) -> DataFrame:
         m = self.read_manifest()
         cycles = m["tables"].get(table, [])
@@ -202,7 +244,7 @@ class TableIO:
                 # mode): readers get the same resolved view transparently
                 return self.read_merge(table, cycle)
             raise FileNotFoundError(f"no committed snapshot for {table}")
-        return self.spark.read.parquet(self._dir(table, max(cycles)))
+        return self._parquet([self._dir(table, max(cycles))])
 
     def read_log(self, table: str, upto_cycle: int | None = None) -> DataFrame:
         m = self.read_manifest()
@@ -213,7 +255,7 @@ class TableIO:
             raise FileNotFoundError(f"no committed data for {table}")
         dirs = [self._dir(table, c) for c in cycles]
         try:
-            return self.spark.read.parquet(*dirs)
+            return self._parquet(dirs)
         except Exception as e:
             # Hive-partitioned segments (write_snapshot partition_by=...)
             # can't share one multi-root scan; union per-segment scans

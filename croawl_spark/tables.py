@@ -1,7 +1,10 @@
 """Explicit engine-table schemas (SURVEY.md §1.2 / FIXTURES.md §5).
 
 Every table is declared, never inferred — the driver compares schemas
-against an oracle, so inference is a correctness hazard.
+against an oracle, so inference is a correctness hazard. TableIO records
+the schema of each segment it writes and reads segments with it;
+tests/test_crawl_order.py::test_declared_crawl_schemas_equal_inferred
+checks that the crawl's tables are written with the schemas below.
 """
 
 from __future__ import annotations

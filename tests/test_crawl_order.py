@@ -373,3 +373,167 @@ def test_spark_submit_py_files_deployment(tmp_path):
     lines = [l for l in out.stdout.splitlines() if l.startswith('{"cycle"')]
     assert len(lines) == 1
     assert json.loads(lines[0])["scheduled"] > 0
+
+
+@pytest.mark.parametrize("n_rows,n_parts", [(0, 8), (3, 16), (1000, 8)])
+def test_global_sequence_and_cumsum_equal_window_reference(spark, n_rows, n_parts):
+    """The range-partitioned sequence and cumsum (offsets read by observe
+    on the partition checkpoint) equal the single-partition window form:
+    random keys and values, empty input, more partitions than rows."""
+    import random
+
+    from pyspark.sql import Window
+
+    from croawl_spark.operators.corpus import global_cumsum
+    from croawl_spark.operators.ranking import global_sequence
+
+    rnd = random.Random(n_rows)
+    keys = rnd.sample(range(10 * n_rows + 1), n_rows)
+    rows = [(k, rnd.randrange(100), rnd.randrange(-5, 50)) for k in keys]
+    d = spark.createDataFrame(rows, "a long, b long, v long") if rows else (
+        spark.range(0).selectExpr("id AS a", "id AS b", "id AS v")
+    )
+    order = Window.orderBy("b", "a")
+
+    got, n = global_sequence(d, ["b", "a"], "seq", start=7, n_parts=n_parts)
+    want = d.withColumn("seq", (F.row_number().over(order) + 6).cast("long"))
+    assert n == n_rows
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    got = global_cumsum(d, ["b", "a"], "v", "cum", n_parts=n_parts)
+    run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = d.withColumn("cum", F.sum("v").over(run).cast("long"))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_metrics_rows_equal_recount(crawl):
+    """Each metrics row (one per cycle and url_hash bucket) equals a
+    recount from fetch_log and documents, and every fetched bucket has a
+    row."""
+    io, _, _ = crawl
+    nb = CFG.n_buckets
+    bucket = F.pmod("url_hash", F.lit(nb)).cast("int").alias("partition_id")
+    sched = io.read_log("fetch_log").groupBy("cycle", bucket).agg(
+        F.count(F.lit(1)).alias("urls_scheduled")
+    )
+    parsed = io.read_log("documents").groupBy("cycle", bucket).agg(
+        F.count(F.lit(1)).alias("urls_parsed"),
+        F.sum(F.size("spans")).cast("long").alias("spans_parsed"),
+    )
+    want = (
+        sched.join(parsed, ["cycle", "partition_id"], "left")
+        .na.fill(0, ["urls_parsed", "spans_parsed"])
+        .select("cycle", "partition_id", "urls_scheduled", "urls_parsed", "spans_parsed")
+    )
+    got = io.read_log("metrics").select(*want.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_last_cycle_wall_counter_covers_metrics_wall(crawl):
+    """last_cycle_wall_ms is the full cycle wall (taken at the commit, so
+    it includes the table writes); metrics.wall_ms is the pre-write wall."""
+    io, _, _ = crawl
+    last = io.counters()["last_cycle_wall_ms"]
+    walls = [
+        r["wall_ms"]
+        for r in io.read_log("metrics").filter(F.col("cycle") == N_CYCLES - 1).collect()
+    ]
+    assert walls and all(last >= w for w in walls)
+    assert last > 0
+
+
+def test_empty_batch_cycle_returns(spark, tmp_path):
+    """Every host delay-gated: the cycle schedules nothing, returns
+    scheduled == 0 (no wait on an observation that never fires), and the
+    next cycle's counters are unchanged."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from croawl_spark import tables
+    from croawl_spark.plans.cycle import bootstrap
+
+    io = TableIO(spark, str(tmp_path / "w"))
+    bootstrap(spark, synth.gen_seeds(30), io, CFG)
+    hs = [
+        (r["host"], r["robots_rules"], 50.0, 0)
+        for r in io.read_snapshot("host_state").collect()
+    ]
+    io.write_snapshot(spark.createDataFrame(hs, tables.HOST_STATE), "host_state", 0)
+    io.commit_cycle(0, ["host_state"])
+    with ThreadPoolExecutor(1) as pool:
+        out = pool.submit(run_cycle, spark, io, 1, CFG).result(timeout=600)
+    assert (out["scheduled"], out["parsed"], out["spans"]) == (0, 0, 0)
+    assert io.counters()["total_fetches"] == 0
+    assert io.read_log("fetch_log").count() == 0
+
+
+def test_reading_committed_segments_starts_no_job(spark, crawl):
+    """Committed segments are read with their recorded schema: building
+    the crawl's read frames runs no Spark job (schema inference would run
+    one footer-scan job per read)."""
+    io, _, _ = crawl
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    io.read_merge("frontier", N_CYCLES - 1)
+    for t in ("seen", "content_seen", "fetch_log", "documents", "metadata",
+              "metrics", "content_dups"):
+        io.read_log(t, N_CYCLES - 1)
+    io.read_snapshot("host_state", N_CYCLES - 1)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_declared_crawl_schemas_equal_inferred(spark, crawl):
+    """Each crawl table's declared schema (tables.py; merge sides add
+    _mseq) equals both what Spark infers from the written files and what
+    TableIO reads them with."""
+    import os
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from croawl_spark import tables
+
+    io, _, _ = crawl
+    mseq = [StructField("_mseq", LongType())]
+    keys = [tables.FRONTIER[c] for c in ("url_hash", "canon_url")]  # delete keys
+    declared = {
+        "fetch_log": tables.FETCH_LOG,
+        "documents": tables.DOCUMENTS,
+        "metadata": tables.METADATA,
+        "metrics": tables.METRICS,
+        "seen": tables.SEEN,
+        "host_state": tables.HOST_STATE,
+        "content_seen": tables.CONTENT_SEEN,
+        "content_dups": tables.CONTENT_DUPS,
+        "frontier__adds": StructType(tables.FRONTIER.fields + mseq),
+        "frontier__dels": StructType(keys + mseq),
+    }
+    for t, schema in declared.items():
+        for c in io.read_manifest()["tables"][t]:
+            path = os.path.join(io.base, t, f"cycle={c}")
+            assert spark.read.parquet(path).schema == schema, (t, c)
+        assert io.read_log(t).schema == schema, t
+
+
+def test_segments_without_schema_sidecar_still_read(spark, crawl):
+    """Segments written before schemas were recorded (no _schema.json)
+    read by inference, alone or mixed with recorded ones, with the same
+    rows and columns."""
+    import os
+    import shutil
+
+    io, _, _ = crawl
+    with tempfile.TemporaryDirectory() as d:
+        shutil.copytree(io.base, f"{d}/w")
+        old = TableIO(spark, f"{d}/w")
+        cycles = old.read_manifest()["tables"]["seen"]
+        for t in ("seen", "host_state", "fetch_log"):
+            for c in cycles[::2]:
+                sidecar = os.path.join(old.base, t, f"cycle={c}", "_schema.json")
+                if os.path.exists(sidecar):
+                    os.remove(sidecar)
+        for t in ("seen", "fetch_log"):
+            a, b = io.read_log(t), old.read_log(t)
+            assert a.schema == b.schema, t
+            assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+        a, b = io.read_snapshot("host_state"), old.read_snapshot("host_state")
+        assert a.schema == b.schema
+        assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))

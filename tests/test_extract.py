@@ -27,6 +27,46 @@ def test_extract_pure(fx):
     assert got["oai_endpoint"] == exp["oai_endpoint"]
 
 
+# Inline fixtures for the <meta> pre-filter (a tag whose raw attribute
+# text has no "dc." is skipped unparsed): the DC name may come after its
+# content, in single quotes and upper case; "dc." in a content value or a
+# citation_* name must not make the tag count.
+META_FIXTURES = [
+    (
+        "content_before_name",
+        '<meta content="A Title" name="dc.title"><meta content="Ann" name="DC.creator">',
+        {"dc_title": "A Title", "dc_creator": ["Ann"], "dc_identifier": None},
+    ),
+    (
+        "upper_single_quotes",
+        "<META NAME='DC.Creator' CONTENT='Bo'><meta name='DC.IDENTIFIER' content='doi:1'>",
+        {"dc_title": None, "dc_creator": ["Bo"], "dc_identifier": "doi:1"},
+    ),
+    (
+        "dc_in_content_only",
+        '<meta name="x" content="dc.title"><meta name="dc.title" content="Real">',
+        {"dc_title": "Real", "dc_creator": [], "dc_identifier": None},
+    ),
+    (
+        "citation_distractor",
+        '<meta name="citation_title" content="Not DC"><meta name="citation_author"'
+        ' content="dc.creator Eve"><meta name="DC.title" content="T">',
+        {"dc_title": "T", "dc_creator": [], "dc_identifier": None},
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "html,exp", [f[1:] for f in META_FIXTURES], ids=[f[0] for f in META_FIXTURES]
+)
+def test_extract_meta_prefilter(html, exp):
+    from croawl_spark.functions.extract import extract_from_html
+
+    got = extract_from_html(f"<html>{html}<a href='http://h.test/x'>x</a></html>")
+    assert {k: got[k] for k in exp} == exp
+    assert got["outlinks"] == ["http://h.test/x"]
+
+
 def test_extract_job_spark(spark):
     """End-to-end §3.2 path: documents_interleaved DF -> metadata DF."""
     from croawl_spark.plans.extract import extract_metadata, with_fingerprint
