@@ -202,7 +202,9 @@ def _apply_bucket_cap(
 # derivation driver-locally (r06 — the cluster/pagerank/bpe_train gate
 # pattern): the distributed form is ~40 AQE stage-jobs of narrow work
 # that pure scheduling overhead dominates until the corpus is large.
-# 100k x 64-dim float64 is ~51 MB through Arrow.
+# 100k x 64-dim float64 is ~51 MB through Arrow. Kept by measurement:
+# with the gate forced off, dedup_embed_lsh ran 0.6-1.2 s slower per warm
+# `operators` battery pass (perfbench, seed 0, 4 cores).
 DRIVER_LOCAL_MAX_VECTORS = 100_000
 
 

@@ -45,6 +45,9 @@ from pyspark.sql import functions as F
 # data to driver size, sequential Spark jobs are pure overhead). 2M
 # (u, v) int64 rows ≈ 32 MB through Arrow — far under driver memory; a
 # near-dup pair set larger than this takes the distributed loop.
+# Kept by measurement: with the gate forced off, dedup_cluster,
+# dedup_cluster_star and host_rank (PageRank) each ran 0.6-1.2 s slower
+# per warm `operators` battery pass (perfbench, seed 0, 4 cores).
 DRIVER_LOCAL_MAX_EDGES = 2_000_000
 
 

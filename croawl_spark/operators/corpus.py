@@ -18,25 +18,6 @@ from croawl_spark.operators.ranking import (  # noqa: F401 (re-export family)
     range_partitions,
 )
 
-# (id, n_tokens) frames at or below this many rows run the pack_sequences
-# cumsum driver-local (two int64 columns ≈ 32 MB through Arrow at the gate)
-# instead of paying the range-partition sample + observed checkpoint +
-# window chain of Spark jobs. Same collect-gate pattern as cluster.py §r06 /
-# ann.py §r06; above the gate (or for non-integer/NULL/duplicate ids) the
-# distributed two-phase cumsum below is unchanged — it remains the 100-TB
-# path.
-DRIVER_LOCAL_MAX_PACK_DOCS = 2_000_000
-
-# resample_sources: ranked-source row sets at or below this size compute
-# the kept-id set driver-local (one Arrow collect of (id, source) + a
-# python md5 rank — ~1 µs/row) instead of the prefilter + salted two-phase
-# rank + verification chain of stage jobs; the kept set re-attaches with a
-# broadcast semi-join, so the docs frame itself never moves. The gate is
-# smaller than the other collect gates because the local cost is
-# hashlib-md5-bound, not numpy-bound.
-DRIVER_LOCAL_MAX_MIX_DOCS = 500_000
-
-
 def _distinct_shingle_rows(
     df: DataFrame, id_col: str, text_col: str, n: int, hash_shingles: bool
 ) -> DataFrame:
@@ -119,11 +100,7 @@ def global_cumsum(
 
 
 def pack_sequences(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    budget: int,
-    driver_local_max_docs: int | None = None,
+    docs: DataFrame, id_col: str, text_col: str, budget: int
 ) -> DataFrame:
     """Token-budget sequence packing: assign documents (in id order) to
     training batches of ~``budget`` whitespace tokens.
@@ -143,65 +120,10 @@ def pack_sequences(
         F.col(id_col),
         F.size(F.split(text_col, " ")).cast("long").alias("n_tokens"),
     ).localCheckpoint()
-    # Driver-local fast path (r06 third pass): the tokenize pass above is
-    # the only corpus-scale work — the cumsum itself runs over two int64
-    # columns. Below the gate, collect them through Arrow and compute the
-    # inclusive cumsum locally (int64-exact, identical values by
-    # definition: cum[i] = sum of n_tokens over ids <= id[i]); the
-    # distributed two-phase form below stays the >gate path.
-    if driver_local_max_docs is None:
-        driver_local_max_docs = DRIVER_LOCAL_MAX_PACK_DOCS
-    if driver_local_max_docs > 0 and toks.count() <= driver_local_max_docs:
-        local = _driver_local_pack_cumsum(toks, id_col)
-        if local is not None:
-            cum = local
-            return cum.withColumn(
-                "batch_id",
-                F.floor(
-                    (F.col("cum_tokens") - F.col("n_tokens")) / F.lit(budget)
-                ).cast("long"),
-            )
     cum = global_cumsum(toks, [id_col], "n_tokens", "cum_tokens")
     return cum.withColumn(
         "batch_id",
         F.floor((F.col("cum_tokens") - F.col("n_tokens")) / F.lit(budget)).cast("long"),
-    )
-
-
-def _driver_local_pack_cumsum(toks: DataFrame, id_col: str) -> DataFrame | None:
-    """(id, n_tokens) -> (id, n_tokens, cum_tokens) computed driver-local.
-
-    Exactness: sort by id (unique integer total order — the same order the
-    distributed range partition + window uses), inclusive int64 cumsum.
-    Returns None (caller keeps the distributed path) for non-integer id
-    types, NULLs, or duplicate ids (a duplicated id is not a total order,
-    so the distributed window's intra-key order would be ambiguous too —
-    never silently pick one here)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow.types as pat
-
-    tbl = toks.toArrow()
-    if not all(pat.is_integer(f.type) for f in tbl.schema):
-        return None
-    if any(c.null_count for c in tbl.columns):
-        return None
-    ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
-    n_tok = tbl.column(1).to_numpy().astype(np.int64, copy=False)
-    order = np.argsort(ids, kind="stable")
-    ids, n_tok = ids[order], n_tok[order]
-    if len(ids) > 1 and (ids[1:] == ids[:-1]).any():
-        return None
-    cum = np.cumsum(n_tok, dtype=np.int64)
-    spark = toks.sparkSession
-    out = pd.DataFrame({id_col: ids, "n_tokens": n_tok, "cum_tokens": cum})
-    id_field = toks.schema[id_col]
-    return spark.createDataFrame(
-        out,
-        schema=(
-            f"{id_col} {id_field.dataType.simpleString()}, "
-            "n_tokens long, cum_tokens long"
-        ),
     )
 
 
@@ -532,62 +454,12 @@ def chunk_documents(
     )
 
 
-def _driver_local_rank_select(narrow: DataFrame, quotas: dict):
-    """Collect the ranked sources' (id, source) pairs and take, per
-    source, the ``quota`` rows with the smallest (md5(cast(id as
-    string)), id) — literally the rank that defines resample_sources'
-    output (the distributed prefilter + salted two-phase rank +
-    verification machinery computes the same set). hashlib.md5 over
-    str(id) equals Spark's ``md5(cast(id as string))`` for integer and
-    string ids (lowercase hex both sides; UTF-8 byte order == codepoint
-    order), and the (hex, id) tuple sort equals the window's
-    ORDER BY (_m, id).
-
-    -> pandas DataFrame (id, source) of kept pairs, or None when
-    ineligible (non-integer/string id type, NULLs, or duplicate ids —
-    a duplicated id makes the distributed tie-break ambiguous and would
-    over-select through the semi-join re-attach)."""
-    import hashlib
-
-    import pandas as pd
-    import pyarrow.types as pat
-
-    tbl = narrow.toArrow()
-    f0 = tbl.schema.field(0)
-    if not (
-        pat.is_integer(f0.type)
-        or pat.is_string(f0.type)
-        or pat.is_large_string(f0.type)
-    ):
-        return None
-    if tbl.column(0).null_count or tbl.column(1).null_count:
-        return None
-    ids = tbl.column(0).to_pylist()
-    srcs = tbl.column(1).to_pylist()
-    by_src: dict[str, list] = {}
-    for i, s in zip(ids, srcs):
-        by_src.setdefault(s, []).append(i)
-    kept_ids: list = []
-    kept_srcs: list = []
-    for s, q in quotas.items():
-        sub = by_src.get(s, [])
-        if len(sub) != len(set(sub)):
-            return None
-        ranked = sorted(
-            (hashlib.md5(str(i).encode("utf-8")).hexdigest(), i) for i in sub
-        )
-        kept_ids.extend(i for _, i in ranked[:q])
-        kept_srcs.extend([s] * min(q, len(sub)))
-    return pd.DataFrame({"id": kept_ids, "source": kept_srcs})
-
-
 def resample_sources(
     docs: DataFrame,
     id_col: str,
     source_col: str,
     weights: dict[str, float],
     n_salt: int = 16,
-    driver_local_max_docs: int | None = None,
 ) -> DataFrame:
     """Deterministic source-mixture rebalancing (the "domain mixing" step
     of a training-data pipeline: given target mixture weights per source,
@@ -704,34 +576,6 @@ def resample_sources(
         )
 
     if ranked_srcs:
-        # Driver-local fast path (r06 third pass): below the gate, compute
-        # the rank-defined kept set in one Arrow collect of (id, source)
-        # and re-attach with a broadcast semi-join — the docs frame never
-        # shuffles either way; this replaces the prefilter + two windows +
-        # verification count as sequential stage jobs. Above the gate, or
-        # for ineligible id types/NULLs/duplicates, the distributed
-        # machinery below is unchanged.
-        if driver_local_max_docs is None:
-            driver_local_max_docs = DRIVER_LOCAL_MAX_MIX_DOCS
-        n_ranked_rows = sum(counts[s] for s in ranked_srcs)
-        if n_ranked_rows <= driver_local_max_docs:
-            kept = _driver_local_rank_select(
-                docs.filter(F.col(source_col).isin(list(ranked_srcs))).select(
-                    F.col(id_col), F.col(source_col)
-                ),
-                ranked_srcs,
-            )
-            if kept is not None:
-                id_t = dict(docs.dtypes)[id_col]
-                src_t = dict(docs.dtypes)[source_col]
-                kept_df = spark.createDataFrame(
-                    kept, schema=f"{id_col} {id_t}, {source_col} {src_t}"
-                )
-                sel = docs.join(
-                    F.broadcast(kept_df), [id_col, source_col], "left_semi"
-                )
-                out = sel if out_all is None else out_all.unionByName(sel)
-                return out.select(*docs.columns)
         sel = _select(ranked_srcs, open_filter=False).localCheckpoint()
         got = {
             r["_s"]: r["_n"]
@@ -748,7 +592,6 @@ def resample_sources(
             )
         out_all = sel if out_all is None else out_all.unionByName(sel)
     # the using-join in _select puts source_col first; restore docs' order
-    # so both paths return the same column order
     out = out_all if out_all is not None else docs.limit(0)
     return out.select(*docs.columns)
 

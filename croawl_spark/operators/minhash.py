@@ -2,18 +2,19 @@
 
 Everything stays JVM-side (no Python in the hot path): shingling via
 higher-order array functions, permutation hashes via ``xxhash64(shingle, p)``
-(seeded by the permutation index as a literal column), signatures via
-grouped MIN aggregates collected into ONE ``array<long>`` column, banding
-via ``xxhash64`` over signature slices.
+(seeded by the permutation index as a literal column), signatures via a
+per-row ``array_min`` over each doc's own shingle hashes, collected into
+ONE ``array<long>`` column, banding via ``xxhash64`` over signature slices.
 
-Scale shape: one explode (docs x shingles), one groupBy(doc) for signatures,
-one explode (docs x bands), one self-join on (band, key) — the classic
-shingle -> minhash -> band -> bucket-join pipeline. The band self-join is
-projected down to (id, band, key) BEFORE the shuffle: signatures are
-re-attached to the (much smaller) candidate-pair set afterwards by two
-narrow id-keyed joins, so the widest columns never ride the widest join.
-The band join is an equi-join on a high-cardinality key, so it shuffles
-well and AQE handles skewed buckets (e.g. boilerplate-heavy corpora).
+Scale shape: signatures need no exchange (each is a function of its own
+row), then one explode (docs x bands) and one self-join on (band, key) —
+the classic shingle -> minhash -> band -> bucket-join pipeline. The band
+self-join is projected down to (id, band, key) BEFORE the shuffle:
+signatures are re-attached to the (much smaller) candidate-pair set
+afterwards by two narrow id-keyed joins, so the widest columns never ride
+the widest join. The band join is an equi-join on a high-cardinality key,
+so it shuffles well and AQE handles skewed buckets (e.g. boilerplate-heavy
+corpora).
 
 Incremental path: ``minhash_signature`` output is the persistable index
 (one array<long> row per doc — ~136 B at n_perm=16); a new batch probes it
@@ -26,25 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Signature tables at or below this many collected rows run LSH banding +
-# candidate pairing + est_sim driver-local (n_perm=16 longs + id ≈ 136 B/row
-# ≈ 3 MB through Arrow at the gate) instead of paying the band self-join /
-# dropDuplicates / two re-attach joins as ~10 AQE stage jobs. Same
-# collect-gate pattern as cluster.py / ann.py (r06): the corpus-scale pass
-# (shingle+minhash signature aggregate) stays distributed — only the
-# already-collapsed signature table crosses to the driver. Above the gate,
-# or for non-integer/NULL ids, the distributed band join is unchanged.
-# Gate MEASURED, not guessed: at 100k sigs with a heavy duplicate profile
-# (20 copies/doc -> 1.05M true pairs) the local pairing ran 2.5x SLOWER
-# than the distributed join (16.5 s vs 6.5 s warm, local[32]) — the win
-# is job-overhead elimination at small candidate sets, so the gate stays
-# where that regime ends (~20k sigs: local ~1 s vs ~4-6 s of stage jobs).
-DRIVER_LOCAL_MAX_SIGS = 20_000
-# Bound the materialized candidate set too: a pathological bucket structure
-# (everything in one band bucket) is quadratic in EITHER engine, but the
-# distributed join spills to disk where the driver cannot — fall back.
-_DRIVER_LOCAL_MAX_PAIRS = 2_000_000
 
 
 def shingles(df: DataFrame, text_col: str, k: int = 3) -> DataFrame:
@@ -69,8 +51,9 @@ def shingles(df: DataFrame, text_col: str, k: int = 3) -> DataFrame:
 def minhash_signature(
     df: DataFrame, id_col: str, text_col: str, n_perm: int = 16, k: int = 3
 ) -> DataFrame:
-    """-> (id_col, sig: array<long>[n_perm]) MinHash signature per document
-    (``id_col`` is a document key — one row per id).
+    """-> (id_col, sig: array<long>[n_perm]) MinHash signature per input
+    row. Rows are not grouped by id: ``id_col`` should be a unique document
+    key, and a repeated id gets one signature row per input row.
 
     This is also the persistable dedup index (write it with TableIO and
     probe later batches against it).
@@ -164,86 +147,6 @@ def lsh_candidate_pairs(
     )
 
 
-def _driver_local_lsh_pairs(
-    sig: DataFrame, id_col: str, n_perm: int, n_bands: int
-):
-    """Replicate lsh_candidate_pairs driver-locally over a collected
-    signature table: same band slices, same candidate semantics (pairs
-    sharing >= 1 band), same est_sim arithmetic (#equal components /
-    float(n_perm) — k/n_perm is float64-exact, so the downstream threshold
-    compare is bit-identical).
-
-    Bands group on the raw slice TUPLE where the distributed form groups
-    on ``xxhash64(slice..., band)``; equal tuples hash equal, so the
-    candidate sets coincide absent a 2^-64 xxhash64 collision — the exact
-    equality standard the shingle/dedup family already documents.
-
-    -> pandas DataFrame (id_a, id_b, est_sim) or None when ineligible
-    (non-integer ids, duplicate ids, NULLs, or a candidate blow-up past
-    the pair cap)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow.types as pat
-
-    tbl = sig.toArrow()
-    id_f, sig_f = tbl.schema.field(0), tbl.schema.field(1)
-    if not pat.is_integer(id_f.type):
-        return None
-    if tbl.column(0).null_count or tbl.column(1).null_count:
-        return None
-    ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
-    if len(np.unique(ids)) != len(ids):
-        # duplicate ids: the distributed join's strict id_a < id_b drops
-        # (x, x) self-pairs that id-value orientation here would emit
-        return None
-    if tbl.num_rows == 0:
-        return pd.DataFrame({"id_a": [], "id_b": [], "est_sim": []})
-    sig_col = tbl.column(1).combine_chunks()
-    flat = sig_col.flatten()
-    if flat.null_count or len(flat) != tbl.num_rows * n_perm:
-        return None  # ragged or null-element signatures: not ours to handle
-    sigs = flat.to_numpy().astype(np.int64, copy=False).reshape(
-        tbl.num_rows, n_perm
-    )
-    rows = n_perm // n_bands
-    cand_a: list[np.ndarray] = []
-    cand_b: list[np.ndarray] = []
-    n_pairs = 0
-    for b in range(n_bands):
-        band = np.ascontiguousarray(sigs[:, b * rows : (b + 1) * rows])
-        # group rows by identical band slice: lexsort + boundary detection
-        order = np.lexsort(band.T[::-1])
-        sb = band[order]
-        new_grp = np.empty(len(sb), dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (sb[1:] != sb[:-1]).any(axis=1)
-        starts = np.flatnonzero(new_grp)
-        ends = np.append(starts[1:], len(sb))
-        for s, e in zip(starts, ends):
-            g = e - s
-            if g < 2:
-                continue
-            n_pairs += g * (g - 1) // 2
-            if n_pairs > _DRIVER_LOCAL_MAX_PAIRS:
-                return None
-            gi = order[s:e]
-            ii, jj = np.triu_indices(g, k=1)
-            cand_a.append(gi[ii])
-            cand_b.append(gi[jj])
-    if not cand_a:
-        return pd.DataFrame({"id_a": [], "id_b": [], "est_sim": []})
-    ia = np.concatenate(cand_a)
-    ib = np.concatenate(cand_b)
-    # orient by id value (the join predicate is id_a < id_b, not index
-    # order) and drop duplicates across bands
-    lo = np.where(ids[ia] < ids[ib], ia, ib)
-    hi = np.where(ids[ia] < ids[ib], ib, ia)
-    uniq = np.unique(np.stack([lo, hi], axis=1), axis=0)
-    lo, hi = uniq[:, 0], uniq[:, 1]
-    est = (sigs[lo] == sigs[hi]).sum(axis=1) / float(n_perm)
-    return pd.DataFrame({"id_a": ids[lo], "id_b": ids[hi], "est_sim": est})
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -252,40 +155,24 @@ def minhash_dedup_pairs(
     n_perm: int = 16,
     n_bands: int = 4,
     k: int = 3,
-    driver_local_max_sigs: int | None = None,
+    driver_local_max_sigs: int | None = None,  # unread; perfbench still passes it
 ) -> DataFrame:
+    """Near-duplicate pairs of a corpus: MinHash signatures, LSH banding
+    into ``n_bands`` bands of ``n_perm // n_bands`` rows, and the pairs
+    that share a bucket in at least one band and whose estimated Jaccard
+    similarity is ``>= threshold``.
+
+    -> (id_a, id_b, est_sim) with id_a < id_b. ``id_col`` must be unique:
+    rows sharing an id are signed and paired separately, so a pair can
+    appear more than once and an id never pairs with its own copy.
+    """
     # eager (r06): the signature table feeds THREE consumers inside
     # lsh_candidate_pairs (band derivation + both re-attach sides) —
-    # checkpoint it once so the shingle+minhash aggregate (the corpus-
-    # scale pass) runs once instead of three times per plan. Signature
+    # checkpoint it once so the shingle+minhash pass (the corpus-scale
+    # pass) runs once instead of three times per plan. Signature
     # VALUES are untouched; the streaming ingest (jobs.py) already
     # checkpoints its signatures for the same reason.
     sig = minhash_signature(df, id_col, text_col, n_perm, k).localCheckpoint()
-    # Driver-local fast path (r06 third pass): the corpus-scale pass is
-    # the signature aggregate above; banding + pairing over the collapsed
-    # signature table fits the driver below the gate (see
-    # _driver_local_lsh_pairs for the exactness argument).
-    if driver_local_max_sigs is None:
-        driver_local_max_sigs = DRIVER_LOCAL_MAX_SIGS
-    if driver_local_max_sigs > 0 and sig.count() <= driver_local_max_sigs:
-        local = _driver_local_lsh_pairs(sig, id_col, n_perm, n_bands)
-        if local is not None:
-            spark = df.sparkSession
-            id_t = sig.schema[id_col].dataType.simpleString()
-            flt = local[local["est_sim"] >= threshold]
-            if len(flt) == 0:
-                # pure-JVM empty relation: createDataFrame of an empty
-                # pandas frame falls back to the pickled-RDD path, whose
-                # first evaluation spins up Python workers (~1.4 s
-                # measured in bench context) to produce zero rows
-                return spark.range(0).select(
-                    F.col("id").cast(id_t).alias("id_a"),
-                    F.col("id").cast(id_t).alias("id_b"),
-                    F.col("id").cast("double").alias("est_sim"),
-                )
-            return spark.createDataFrame(
-                flt, schema=f"id_a {id_t}, id_b {id_t}, est_sim double"
-            )
     return lsh_candidate_pairs(sig, id_col, n_perm, n_bands).filter(
         F.col("est_sim") >= threshold
     )

@@ -29,9 +29,6 @@ def main() -> None:
                     help="continue from the last committed cycle")
     ap.add_argument("--n-salt", type=int, default=16)
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--frontier-mode", choices=("tombstone", "rewrite"),
-                    default="tombstone",
-                    help="tombstone = O(batch+new) frontier checkpoint per cycle")
     ap.add_argument("--compact-every", type=int, default=8,
                     help="fold frontier tombstones into one segment every K cycles")
     args = ap.parse_args()
@@ -46,7 +43,6 @@ def main() -> None:
         k_per_host=args.budget,
         n_salt=args.n_salt,
         n_buckets=args.n_buckets,
-        frontier_mode=args.frontier_mode,
         frontier_compact_every=args.compact_every,
     )
     io = TableIO(spark, args.warehouse)

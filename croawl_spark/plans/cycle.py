@@ -34,9 +34,10 @@ seen-set are the driver's correctness gate):
        disc_seq = next_disc_seq counter + rank over (parent_fetch_seq,
        link_pos); depth = parent_depth + 1. Batch rows leave the frontier;
        ALL new URLs enter seen; robots-allowed new rows enter the frontier.
-    7. checkpoint: snapshots (frontier, seen, host_state) +
-       logs (fetch_log, documents, metadata, metrics) written, then the
-       cycle manifest commits atomically (TableIO).
+    7. checkpoint: frontier adds + tombstone keys, the seen delta, the
+       host_state snapshot and the logs (fetch_log, documents, metadata,
+       metrics) written, then the cycle manifest commits atomically
+       (TableIO).
 
 Determinism discipline: every rank/sequence derives from data columns
 (depth, disc_seq, fetch_seq, link_pos) — never partition ids, never wall
@@ -85,13 +86,9 @@ class CrawlConfig:
     n_buckets: int = 64          # metrics lineage buckets: pmod(url_hash, n_buckets)
     # not read by the crawl; bench.py, __spark_entry__.py and perfbench still pass it
     m_bits: int = 1 << 15
-    # frontier checkpointing: "tombstone" appends O(batch) delete keys +
-    # O(new) add rows per cycle and resolves adds-minus-dels at read time
-    # (the Iceberg positional-delete shape — at 10^10 URLs a per-cycle
-    # O(frontier) rewrite is the last O(corpus) write in the loop);
-    # "rewrite" is the plain full-snapshot-per-cycle mode. Both produce
-    # byte-identical fetch logs.
-    frontier_mode: str = "tombstone"
+    # the frontier is a merge table: O(new) adds + O(batch) tombstone keys
+    # per cycle, resolved at read time (the Iceberg positional-delete shape;
+    # a per-cycle O(frontier) rewrite would be O(corpus) at 10^10 URLs)
     frontier_compact_every: int = 8  # fold tombstones into one segment every K cycles
     shuffle_partitions: int | None = None
 
@@ -282,11 +279,7 @@ def bootstrap(
     seen = frontier.select("url_hash", "canon_url", "disc_seq")
     host_state = _robots_stage(frontier.select("host").distinct()).persist()
     frontier_allowed = _filter_allowed(frontier, host_state)
-    if cfg.frontier_mode == "tombstone":
-        frontier_tables = io.write_merge_delta(frontier_allowed, None, "frontier", -1)
-    else:
-        io.write_snapshot(frontier_allowed, "frontier", -1)
-        frontier_tables = ["frontier"]
+    frontier_tables = io.write_merge_delta(frontier_allowed, None, "frontier", -1)
     io.write_snapshot(seen, "seen", -1)  # first segment of the append-only seen log
     io.write_snapshot(host_state, "host_state", -1)
     io.commit_cycle(
@@ -318,12 +311,9 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     import time as _time
 
     _cycle_start = _time.perf_counter()
-    if cfg.frontier_mode == "tombstone":
-        # adds-minus-tombstones view: the dels side is O(cycles × batch),
-        # so AQE resolves it as a broadcast anti-join — no frontier shuffle
-        frontier = io.read_merge("frontier", cycle - 1)
-    else:
-        frontier = io.read_snapshot("frontier", cycle - 1)
+    # adds-minus-tombstones view: the dels side is O(cycles × batch),
+    # so AQE resolves it as a broadcast anti-join — no frontier shuffle
+    frontier = io.read_merge("frontier", cycle - 1)
     # seen is an APPEND-ONLY log (bootstrap segment + one delta per cycle):
     # at 10^10 URLs a full rewrite per cycle would be O(corpus); appends are
     # O(delta) — the Iceberg-append pattern (TableIO emulates it)
@@ -541,40 +531,33 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
 
     def _writes_frontier() -> tuple[list[str], dict[str, list[int]] | None]:
         io.write_snapshot(host_state_next, "host_state", cycle)
-        if cfg.frontier_mode == "tombstone":
-            compact_now = (
-                cfg.frontier_compact_every > 0
-                and (cycle + 1) % cfg.frontier_compact_every == 0
-            )
-            if compact_now:
-                # amortized O(frontier) rewrite (1 cycle in K): the
-                # resolved view becomes the sole adds segment, the
-                # tombstone log empties — both in the cycle's one atomic
-                # manifest commit
-                frontier_next = frontier.join(
-                    batch.select("url_hash", "canon_url"),
-                    ["url_hash", "canon_url"],
-                    "left_anti",
-                ).unionByName(new_allowed)
-                return (
-                    io.write_merge_delta(frontier_next, None, "frontier", cycle),
-                    {"frontier__adds": [cycle], "frontier__dels": []},
-                )
-            # the O(delta) steady state: O(new) adds + O(batch) delete keys
+        compact_now = (
+            cfg.frontier_compact_every > 0
+            and (cycle + 1) % cfg.frontier_compact_every == 0
+        )
+        if compact_now:
+            # amortized O(frontier) rewrite (1 cycle in K): the resolved
+            # view becomes the sole adds segment, the tombstone log
+            # empties — both in the cycle's one atomic manifest commit
+            frontier_next = frontier.join(
+                batch.select("url_hash", "canon_url"),
+                ["url_hash", "canon_url"],
+                "left_anti",
+            ).unionByName(new_allowed)
             return (
-                io.write_merge_delta(
-                    new_allowed,
-                    batch.select("url_hash", "canon_url"),
-                    "frontier",
-                    cycle,
-                ),
-                None,
+                io.write_merge_delta(frontier_next, None, "frontier", cycle),
+                {"frontier__adds": [cycle], "frontier__dels": []},
             )
-        frontier_next = frontier.join(
-            batch.select("url_hash", "canon_url"), ["url_hash", "canon_url"], "left_anti"
-        ).unionByName(new_allowed)
-        io.write_snapshot(frontier_next, "frontier", cycle)
-        return (["frontier"], None)
+        # the O(delta) steady state: O(new) adds + O(batch) delete keys
+        return (
+            io.write_merge_delta(
+                new_allowed,
+                batch.select("url_hash", "canon_url"),
+                "frontier",
+                cycle,
+            ),
+            None,
+        )
 
     with ThreadPoolExecutor(max_workers=4) as _pool:
         _f_frontier = _pool.submit(_writes_frontier)

@@ -240,8 +240,8 @@ class TableIO:
             cycles = [c for c in cycles if c <= cycle]
         if not cycles:
             if f"{table}__adds" in m["tables"]:
-                # the table is checkpointed as a merge table (tombstone
-                # mode): readers get the same resolved view transparently
+                # the table is checkpointed as a merge table (adds +
+                # tombstones): readers get the resolved view transparently
                 return self.read_merge(table, cycle)
             raise FileNotFoundError(f"no committed snapshot for {table}")
         return self._parquet([self._dir(table, max(cycles))])

@@ -232,25 +232,23 @@ def test_tableio_merge_semantics(spark, tmp_path):
     assert {tuple(r) for r in io.read_merge("t").collect()} == {(1, "a2"), (9, "z")}
 
 
-def test_tombstone_frontier_equals_rewrite_and_compacts(spark):
-    """VERDICT r02 item #2 done-criteria: O(delta) frontier checkpointing
-    must leave the fetch log AND the resolved frontier byte-identical to
-    the full-rewrite engine, survive an interrupt+resume across a
-    compaction boundary, and actually write only O(batch+new) rows on
-    non-compact cycles."""
+def test_tombstone_frontier_equals_oracle_and_compacts(spark):
+    """O(delta) frontier checkpointing must leave the fetch log AND the
+    resolved frontier equal to the single-process oracle's, survive an
+    interrupt+resume across a compaction boundary, and actually write only
+    O(batch+new) rows on non-compact cycles."""
     seeds = synth.gen_seeds(60)
     ts = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=16, m_bits=1 << 12,
-                     frontier_mode="tombstone", frontier_compact_every=3)
-    rw = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=16, m_bits=1 << 12,
-                     frontier_mode="rewrite")
+                     frontier_compact_every=3)
+    oracle_log, _, oracle_frontier = simulate(seeds, 5, ts.k_per_host)
     with tempfile.TemporaryDirectory() as d:
         io_ts = run_crawl(spark, seeds, 5, f"{d}/ts", ts)
-        io_rw = run_crawl(spark, seeds, 5, f"{d}/rw", rw)
-        assert _spark_log_rows(io_ts) == _spark_log_rows(io_rw)
-        cols = io_rw.read_snapshot("frontier").columns
-        a = sorted(tuple(r) for r in io_ts.read_snapshot("frontier").select(*cols).collect())
-        b = sorted(tuple(r) for r in io_rw.read_snapshot("frontier").collect())
-        assert a == b
+        assert _spark_log_rows(io_ts) == [tuple(r) for r in oracle_log]
+        got = {
+            r["canon_url"]: (r["depth"], r["disc_seq"])
+            for r in io_ts.read_snapshot("frontier").collect()
+        }
+        assert got == oracle_frontier
         # compaction fired at cycle 2 ((2+1) % 3 == 0): one adds segment
         # there, deltas after, and no tombstones older than the compaction
         m = io_ts.read_manifest()
@@ -269,7 +267,7 @@ def test_tombstone_frontier_equals_rewrite_and_compacts(spark):
         io_part = run_crawl(spark, seeds, 3, f"{d}/part", ts)
         assert io_part.read_manifest()["tables"]["frontier__adds"] == [2]
         io_res = run_crawl(spark, seeds, 5, f"{d}/part", ts, resume=True)
-        assert _spark_log_rows(io_res) == _spark_log_rows(io_rw)
+        assert _spark_log_rows(io_res) == _spark_log_rows(io_ts)
 
 
 def test_tombstone_crash_orphans_are_replayed(spark):
@@ -281,7 +279,7 @@ def test_tombstone_crash_orphans_are_replayed(spark):
 
     seeds = synth.gen_seeds(60)
     ts = CrawlConfig(k_per_host=2, n_salt=4, n_buckets=16, m_bits=1 << 12,
-                     frontier_mode="tombstone", frontier_compact_every=3)
+                     frontier_compact_every=3)
     with tempfile.TemporaryDirectory() as d:
         full = _spark_log_rows(run_crawl(spark, seeds, 4, f"{d}/full", ts))
         io = run_crawl(spark, seeds, 2, f"{d}/part", ts)

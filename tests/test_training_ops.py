@@ -12,6 +12,9 @@ SF = "/root/testdata/sf0.01"
 
 
 def test_minhash_finds_planted_duplicate(spark):
+    """Planted exact copies are found under the default and a non-default
+    (n_perm, n_bands) geometry; an unreachable threshold gives no pair;
+    every pair is oriented id_a < id_b, also when ids repeat."""
     from croawl_spark.operators.minhash import minhash_dedup_pairs
 
     d = spark.read.parquet(f"{SF}/documents.parquet").filter(F.col("doc_id") < 50)
@@ -24,6 +27,29 @@ def test_minhash_finds_planted_duplicate(spark):
     assert any(r["id_a"] == 3 and r["id_b"] == 100003 for r in pairs)
     # exact dup estimates sim 1.0
     assert all(r["est_sim"] <= 1.0 for r in pairs)
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).select("doc_id", "text")
+    planted = {(i, i + 70000) for i in range(6)}
+    d = docs.unionByName(
+        docs.filter(F.col("doc_id") < 6).select(
+            (F.col("doc_id") + 70000).alias("doc_id"), "text"
+        )
+    )
+    dup_ids = docs.unionByName(docs.filter(F.col("doc_id") < 3))
+    for data, kw, want_planted in (
+        (d, dict(threshold=0.5), True),
+        (d, dict(threshold=0.7, n_perm=8, n_bands=2), True),
+        (d, dict(threshold=1.01), False),
+        (dup_ids, dict(threshold=0.5), False),
+    ):
+        got = minhash_dedup_pairs(data, "doc_id", "text", **kw).collect()
+        assert all(r["id_a"] < r["id_b"] for r in got), kw
+        if want_planted:
+            assert planted <= {(r["id_a"], r["id_b"]) for r in got}, kw
+        if kw["threshold"] > 1.0:
+            assert got == [], kw
 
 
 def test_exact_dedup_two_level_equals_text_grouping(spark):
@@ -1649,119 +1675,84 @@ def test_embed_pairs_driver_local_equals_distributed(spark):
         assert loc == dist and len(loc) > 0, kw
 
 
-def test_minhash_pairs_driver_local_equals_distributed(spark):
-    """r06 third pass: the driver-local LSH banding/pairing fast path
-    (under DRIVER_LOCAL_MAX_SIGS) must emit EXACTLY the distributed band
-    self-join's rows — same signatures (computed distributed either way),
-    same candidate set (band-slice tuple equality == band-hash equality),
-    same est_sim doubles (#equal/n_perm is float64-exact). Covers planted
-    exact duplicates, a non-default (n_perm, n_bands) geometry, an
-    empty-pair corpus, and duplicate ids (the local path must decline:
-    the distributed join's strict id_a < id_b emits no (x, x) pair)."""
-    from croawl_spark.operators.minhash import minhash_dedup_pairs
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    dup = docs.filter(F.col("doc_id") < 6).select(
-        (F.col("doc_id") + 70000).alias("doc_id"), "text"
-    )
-    d = docs.unionByName(dup)
-    dup_ids = docs.unionByName(docs.filter(F.col("doc_id") < 3))
-
-    for data, kw in (
-        (d, dict(threshold=0.5)),
-        (d, dict(threshold=0.7, n_perm=8, n_bands=2)),
-        (d, dict(threshold=1.01)),  # no pair can pass: empty output both ways
-        (dup_ids, dict(threshold=0.5)),
-    ):
-        loc = sorted(
-            map(tuple, minhash_dedup_pairs(data, "doc_id", "text", **kw).collect())
-        )
-        dist = sorted(
-            map(
-                tuple,
-                minhash_dedup_pairs(
-                    data, "doc_id", "text", driver_local_max_sigs=-1, **kw
-                ).collect(),
-            )
-        )
-        assert loc == dist, kw
-        assert all(a != b for a, b, _ in loc), kw
-        if data is d and kw["threshold"] <= 0.5:
-            planted = {(i, i + 70000) for i in range(6)}
-            assert planted <= {(a, b) for a, b, _ in loc}
-
-
-def test_pack_sequences_driver_local_equals_distributed(spark):
-    """r06 third pass: the driver-local cumsum fast path (under
-    DRIVER_LOCAL_MAX_PACK_DOCS) must reproduce the distributed two-phase
-    range-partition cumsum bit-exactly — same (n_tokens, cum_tokens,
-    batch_id) int64 values in id order — and must fall back to the
-    distributed path when ids are duplicated (not a total order)."""
+def test_pack_sequences_inclusive_cumsum_and_batches(spark):
+    """pack_sequences' distributed two-phase range-partition cumsum gives,
+    in id order, the inclusive int64 cumsum of n_tokens and
+    batch_id = tokens before the doc // budget; duplicate ids keep every
+    row."""
     from croawl_spark.operators.corpus import pack_sequences
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    loc = sorted(map(tuple, pack_sequences(docs, "doc_id", "text", 512).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            pack_sequences(
-                docs, "doc_id", "text", 512, driver_local_max_docs=-1
-            ).collect(),
-        )
-    )
-    assert loc == dist and len(loc) == docs.count()
-    # inclusive cumsum invariant + batch quantization spot-check
+    got = sorted(map(tuple, pack_sequences(docs, "doc_id", "text", 512).collect()))
+    assert len(got) == docs.count()
     prev = 0
-    for _id, n, cum, batch in loc:
+    for _id, n, cum, batch in got:
         assert cum == prev + n and batch == (cum - n) // 512
         prev = cum
 
-    # duplicate ids: local path must decline (fall back), output still rows
     dup = docs.unionByName(docs.limit(3))
     out = pack_sequences(dup, "doc_id", "text", 512)
     assert out.count() == docs.count() + 3
 
 
-def test_resample_sources_driver_local_equals_distributed(spark):
-    """r06 third pass: the driver-local rank selection (hashlib md5 over
-    collected (id, source) pairs under DRIVER_LOCAL_MAX_MIX_DOCS) must
-    emit EXACTLY the distributed prefilter + salted-rank machinery's kept
-    set — same quotas (identical IEEE math on identical counts), same
-    (md5, id) rank — for integer AND string ids, including a keep-all
-    source and a weighted-but-absent-source mix. Both paths return docs'
-    column order."""
+def _resample_reference(src_sql: str, id_sql: str, weights: dict) -> list:
+    """DuckDB window reference for resample_sources: per source, the rows
+    with row_number() OVER (PARTITION BY lang ORDER BY md5(id), id) <=
+    quota, with the quota arithmetic of ORACLE["domain_mix"]."""
+    import duckdb
+
+    wv = ", ".join(f"('{s}', CAST({w!r} AS DOUBLE))" for s, w in weights.items())
+    sql = (
+        f"WITH d AS (SELECT {id_sql} AS id, lang FROM {src_sql}), "
+        "n AS (SELECT lang, count(*) AS c FROM d GROUP BY lang), "
+        f"w(lang, wt) AS (VALUES {wv}), "
+        "t AS (SELECT min(c / wt) AS tv FROM n JOIN w USING (lang)), "
+        "q AS (SELECT lang, CAST(floor(wt * tv) AS BIGINT) AS quota "
+        "FROM n JOIN w USING (lang) CROSS JOIN t), "
+        "r AS (SELECT id, lang, row_number() OVER (PARTITION BY lang "
+        "ORDER BY md5(CAST(id AS VARCHAR)), id) AS rn FROM d) "
+        "SELECT id, lang FROM r JOIN q USING (lang) WHERE rn <= quota"
+    )
+    con = duckdb.connect()
+    try:
+        return sorted(con.sql(sql).fetchall())
+    finally:
+        con.close()
+
+
+def test_resample_sources_equals_window_reference(spark):
+    """resample_sources' prefilter + salted two-phase rank keeps exactly
+    the (md5(id), id)-ranked quota per source that a plain window gives,
+    for integer AND string ids, including a keep-all source, a
+    weighted-but-absent source and a mix with no keep-all source; the
+    output keeps docs' column order."""
     from croawl_spark.operators.corpus import resample_sources
 
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    path = "/root/testdata/sf0.01/documents.parquet"
+    d = spark.read.parquet(path)
     for w in (
         {"en": 0.5, "zh": 0.25, "es": 0.25},
         {"en": 0.3, "zh": 0.7},
         {"en": 1.0, "fr": 0.5},  # fr absent from the data: ignored
         # both quotas floor below their counts (fr: 63 of 64): no keep-all
-        # source, so the distributed path's using-join order shows
+        # source, so the using-join's column order would show
         {"en": 0.05, "fr": 0.95},
     ):
-        loc_df = resample_sources(d, "doc_id", "lang", w)
-        dist_df = resample_sources(d, "doc_id", "lang", w, driver_local_max_docs=-1)
-        assert loc_df.columns == dist_df.columns == d.columns, w
-        loc = sorted(map(tuple, loc_df.select("doc_id", "lang").collect()))
-        dist = sorted(map(tuple, dist_df.select("doc_id", "lang").collect()))
-        assert loc == dist and len(loc) > 0, w
+        out = resample_sources(d, "doc_id", "lang", w)
+        assert out.columns == d.columns, w
+        got = sorted(map(tuple, out.select("doc_id", "lang").collect()))
+        assert got == _resample_reference(f"'{path}'", "doc_id", w) and got, w
 
     sd = d.select(
         F.concat(F.lit("d:"), F.col("doc_id").cast("string")).alias("sid"),
         "lang",
     )
-    loc_df = resample_sources(sd, "sid", "lang", {"en": 0.4, "zh": 0.6})
-    dist_df = resample_sources(
-        sd, "sid", "lang", {"en": 0.4, "zh": 0.6}, driver_local_max_docs=-1
-    )
-    assert loc_df.columns == dist_df.columns == sd.columns
-    loc = sorted(map(tuple, loc_df.collect()))
-    dist = sorted(map(tuple, dist_df.collect()))
-    assert loc == dist and len(loc) > 0
+    w = {"en": 0.4, "zh": 0.6}
+    out = resample_sources(sd, "sid", "lang", w)
+    assert out.columns == sd.columns
+    got = sorted(map(tuple, out.collect()))
+    want = _resample_reference(f"'{path}'", "'d:' || CAST(doc_id AS VARCHAR)", w)
+    assert got == want and got
 
 
 def test_graph_loops_fused_convergence_scalar(spark):
