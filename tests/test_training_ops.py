@@ -52,6 +52,59 @@ def test_minhash_finds_planted_duplicate(spark):
             assert got == [], kw
 
 
+def test_minhash_pairs_driver_local_equals_distributed(spark):
+    """The distributed band self-join emits exactly the rows of a
+    driver-local LSH over the collected signatures: pairs sharing a band
+    slice (slice equality == band-key equality), est_sim as the float64
+    fraction of equal components, kept at ``>= threshold``. Covers planted
+    exact duplicates, a non-default (n_perm, n_bands) geometry and an
+    empty-pair threshold."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from croawl_spark.operators.minhash import minhash_dedup_pairs, minhash_signature
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).select("doc_id", "text")
+    d = docs.unionByName(
+        docs.filter(F.col("doc_id") < 6).select(
+            (F.col("doc_id") + 70000).alias("doc_id"), "text"
+        )
+    )
+
+    for kw in (
+        dict(threshold=0.5),
+        dict(threshold=0.7, n_perm=8, n_bands=2),
+        dict(threshold=1.01),  # no pair can pass: empty output both ways
+    ):
+        n_perm, n_bands = kw.get("n_perm", 16), kw.get("n_bands", 4)
+        rows = n_perm // n_bands
+        sigs = {
+            r["doc_id"]: r["sig"]
+            for r in minhash_signature(d, "doc_id", "text", n_perm).collect()
+        }
+        cand = set()
+        for b in range(n_bands):
+            buckets = defaultdict(list)
+            for i, s in sigs.items():
+                buckets[tuple(s[b * rows : (b + 1) * rows])].append(i)
+            for ids in buckets.values():
+                cand.update(combinations(sorted(ids), 2))
+        want = []
+        for a, b in cand:
+            est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / float(n_perm)
+            if est >= kw["threshold"]:
+                want.append((a, b, est))
+        got = sorted(
+            map(tuple, minhash_dedup_pairs(d, "doc_id", "text", **kw).collect())
+        )
+        assert got == sorted(want), kw
+        if kw["threshold"] <= 0.5:
+            planted = {(i, i + 70000) for i in range(6)}
+            assert planted <= {(a, b) for a, b, _ in got}
+
+
 def test_exact_dedup_two_level_equals_text_grouping(spark):
     """The two-level (hash,len)->text dedup must be byte-identical to plain
     GROUP BY text — including under planted corpus duplicates."""
