@@ -252,9 +252,9 @@ def _embed_pairs_driver_local(
     # pure-JVM empty relation (an empty pandas createDataFrame falls back
     # to the pickled-RDD path, whose evaluation launches Python workers)
     empty_pairs = spark.range(0).select(
-        F.col("id").cast(id_type).alias("id_a"),
-        F.col("id").cast(id_type).alias("id_b"),
-        F.col("id").cast("double").alias("cosine"),
+        F.lit(None).cast(id_type).alias("id_a"),
+        F.lit(None).cast(id_type).alias("id_b"),
+        F.lit(None).cast("double").alias("cosine"),
     )
     n = len(tbl)
     if n == 0:
@@ -440,7 +440,7 @@ def embed_dedup_pairs(
     # NULL / ragged inputs — the distributed pipeline below is unchanged.
     if driver_local_max_vectors is None:
         driver_local_max_vectors = DRIVER_LOCAL_MAX_VECTORS
-    if base.count() <= driver_local_max_vectors:
+    if driver_local_max_vectors > 0 and base.count() <= driver_local_max_vectors:
         local = _embed_pairs_driver_local(
             vectors.sparkSession, base, threshold, n_planes, n_tables,
             bucket_cap, n_extra,

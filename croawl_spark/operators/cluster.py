@@ -309,6 +309,7 @@ def connected_components_star(
     # Driver-local fast path (r06) — same gate and numpy fixpoint as
     # connected_components; for star semantics the mapping (component =
     # min id over all edge ENDPOINTS reachable) is exact by construction.
+    # n_b also sizes the loop's partitions, so it runs with the gate off.
     if driver_local_max_edges is None:
         driver_local_max_edges = DRIVER_LOCAL_MAX_EDGES
     if n_b <= driver_local_max_edges:

@@ -815,7 +815,7 @@ def bpe_train(
     equals Spark's UTF8 binary ordering because UTF-8 byte order
     preserves codepoint order), so the merge list is identical — pinned
     by test_bpe_train_local_equals_distributed. Set
-    ``driver_local_max_words=0`` to force the distributed loop.
+    ``driver_local_max_words=0`` to force the distributed loop (no count).
     """
     import pandas as pd
 
@@ -832,7 +832,7 @@ def bpe_train(
         )
         .localCheckpoint()
     )
-    if words.count() <= driver_local_max_words:
+    if driver_local_max_words > 0 and words.count() <= driver_local_max_words:
         vocab = [(list(r["_syms"]), int(r["_freq"])) for r in words.collect()]
         local_merges: list[tuple[str, str]] = []
         for _ in range(n_merges):

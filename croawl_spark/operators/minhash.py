@@ -30,13 +30,14 @@ from pyspark.sql import functions as F
 
 
 def shingles(df: DataFrame, text_col: str, k: int = 3) -> DataFrame:
-    """Add ``shingles: array<string>`` of k-word shingles (distinct).
+    """Add ``shingles: array<string>`` of k-word shingles (distinct),
+    never NULL or empty: NULL text and ``""`` both give ``[""]``.
 
     The token array is materialized in its own projection before the
-    per-position lambda (r06): an inline ``split()`` referenced inside
-    ``transform``'s lambda re-splits the text once per position —
-    O(tokens²) per doc. Shingle strings (and so every downstream MinHash
-    signature value) are byte-identical to the inline form."""
+    per-position lambda (r06): ``split()`` inside ``transform``'s lambda
+    re-splits the text once per position — O(tokens²) per doc. So put no
+    predicate over ``shingles``: Catalyst pushes it below that projection
+    and substitutes ``split`` back into the lambda (test_plans.py pins it)."""
     toks = F.col("_mh_toks")
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
@@ -64,9 +65,8 @@ def minhash_signature(
     which paid a full (doc x shingle) shuffle to compute a value that
     never needed cross-row data. Signature VALUES are byte-identical
     (min over the same distinct-shingle multiset, same ``xxhash64(shingle,
-    p)`` hashes); the empty/NULL-shingle filter reproduces the explode
-    form's row semantics (such docs emitted no row)."""
-    sh = shingles(df, text_col, k)
+    p)`` hashes). Every input row is signed: ``shingles`` is never NULL
+    or empty, and NULL text signs like ``""``."""
 
     def _perm_min(p: int) -> F.Column:
         # NB: the lambda must stay single-argument — pyspark treats a
@@ -74,9 +74,7 @@ def minhash_signature(
         return F.array_min(F.transform("shingles", lambda s: F.xxhash64(s, F.lit(p))))
 
     mins = [_perm_min(p) for p in range(n_perm)]
-    return sh.filter(
-        F.col("shingles").isNotNull() & (F.size("shingles") > 0)
-    ).select(id_col, F.array(*mins).alias("sig"))
+    return shingles(df, text_col, k).select(id_col, F.array(*mins).alias("sig"))
 
 
 def _band_structs(n_perm: int, n_bands: int) -> F.Column:

@@ -115,9 +115,9 @@ def pagerank(
     # at web scale par_e stays at defaultParallelism and the coalesce is
     # a no-op in effect.
     n_e = e.count()
-    # Driver-local fast path (r06): both setup counts are already paid;
-    # when vertices AND distinct edges fit the collect gate, run the
-    # power loop on the driver (numpy) instead of 2 Spark jobs x n_iter.
+    # Driver-local fast path (r06): both setup counts are paid anyway (they
+    # size the loop); when vertices AND distinct edges fit the collect
+    # gate, run the power loop on the driver instead of 2 jobs x n_iter.
     if driver_local_max_edges is None:
         driver_local_max_edges = DRIVER_LOCAL_MAX_EDGES
     if n <= driver_local_max_edges and n_e <= driver_local_max_edges:

@@ -300,3 +300,49 @@ def test_bucketed_index_join_never_shuffles_the_index(spark, tmp_path):
         assert "Exchange hashpartitioning" in probe_side  # probe side only
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text inside each ``lambdafunction(...)`` of a plan string."""
+    bodies, i = [], plan.find("lambdafunction(")
+    while i != -1:
+        j = k = i + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[k], 0)
+            k += 1
+        bodies.append(plan[j : k - 1])
+        i = plan.find("lambdafunction(", i + 1)
+    return bodies
+
+
+def test_shingle_lambdas_never_split(spark):
+    """No token-shingle kernel splits text inside a per-position lambda
+    of its optimized plan: a ``split`` there re-splits the document once
+    per position, O(tokens²) per doc. The optimizer can put one there
+    that the source does not (a predicate over a projected column is
+    pushed below the projection and the alias substituted back), so this
+    reads the plan, not the source."""
+    from croawl_spark.operators.corpus import _distinct_shingle_rows, repetition_filter
+    from croawl_spark.operators.dedup import _shingle_occurrences
+    from croawl_spark.operators.minhash import minhash_signature, shingles
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, None), (3, "")], "id long, text string"
+    )
+    kernels = {
+        "minhash.shingles": shingles(df, "text"),
+        "minhash.minhash_signature": minhash_signature(df, "id", "text"),
+        "corpus.repetition_filter": repetition_filter(df, "id", "text"),
+    }
+    for h in (False, True):
+        kernels[f"dedup._shingle_occurrences(hash={h})"] = _shingle_occurrences(
+            df, "id", "text", 3, h
+        )
+        kernels[f"corpus._distinct_shingle_rows(hash={h})"] = _distinct_shingle_rows(
+            df, "id", "text", 3, h
+        )
+    for name, k in kernels.items():
+        bodies = _lambda_bodies(k._jdf.queryExecution().optimizedPlan().toString())
+        assert bodies, name
+        assert not [b for b in bodies if "split(" in b], name

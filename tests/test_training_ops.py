@@ -105,6 +105,47 @@ def test_minhash_pairs_driver_local_equals_distributed(spark):
             assert planted <= {(a, b) for a, b, _ in got}
 
 
+def test_minhash_signature_equals_explode_reference(spark):
+    """minhash_signature equals the explode + groupBy(id).min(xxhash64)
+    form with split inline in the shingle lambda, value for value and row
+    for row, at n_perm 16 and 8. NULL, empty, blank, 1- and 2-token and
+    2,000-token texts are included; NULL text keeps its row and signs
+    like ""."""
+    from croawl_spark.operators.minhash import minhash_signature
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).select("doc_id", "text")
+    long_doc = " ".join(f"W{i % 700}" for i in range(2000))
+    crafted = spark.createDataFrame(
+        [(90000, None), (90001, ""), (90002, " "), (90003, "one"),
+         (90004, "Two words"), (90005, long_doc)],
+        "doc_id long, text string",
+    )
+    d = docs.unionByName(crafted)
+
+    toks = F.split(F.lower("text"), " ")
+    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 2, F.lit(1)))
+    ex = d.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
+            )
+        ).alias("sh"),
+    )
+    for n_perm in (16, 8):
+        ref = ex.groupBy("doc_id").agg(
+            *[F.min(F.xxhash64("sh", F.lit(p))).alias(f"h{p}") for p in range(n_perm)]
+        )
+        want = {r[0]: list(r[1:]) for r in ref.collect()}
+        got_rows = minhash_signature(d, "doc_id", "text", n_perm).collect()
+        got = {r["doc_id"]: r["sig"] for r in got_rows}
+        assert len(got_rows) == len(want) == d.count(), n_perm
+        assert got == want, n_perm
+        assert got[90000] == got[90001], n_perm
+
+
 def test_exact_dedup_two_level_equals_text_grouping(spark):
     """The two-level (hash,len)->text dedup must be byte-identical to plain
     GROUP BY text — including under planted corpus duplicates."""
@@ -1726,6 +1767,69 @@ def test_embed_pairs_driver_local_equals_distributed(spark):
             )
         )
         assert loc == dist and len(loc) > 0, kw
+
+
+def _jobs_and_result(spark, call):
+    """(number of Spark jobs ``call()`` starts, its result), read from the
+    status tracker under a job group of its own. A marker job in a second
+    group is awaited first: the tracker is fed by the listener bus in
+    order, so once the marker shows, every job of the call has shown."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = f"t-{uuid.uuid4()}", f"m-{uuid.uuid4()}"
+    sc.setJobGroup(group, "gate count test")
+    try:
+        out = call()
+        sc.setJobGroup(marker, "gate count test marker")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.time() < deadline:
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group)), out
+
+
+def test_gate_forced_off_skips_count(spark):
+    """A driver-local gate forced off (0) skips the gate's count: against
+    a gate just below the input size (count taken, then the same
+    distributed path) embed_dedup_pairs and bpe_train start exactly the
+    jobs of one count() fewer and return the same rows, schema and column
+    order. On an empty input the forced-off call returns what the
+    driver-local path returns."""
+    import numpy as np
+
+    from croawl_spark.operators.ann import embed_dedup_pairs
+    from croawl_spark.operators.corpus import bpe_train
+
+    rng = np.random.RandomState(3)
+    V = rng.standard_normal((120, 8)).astype(np.float32)
+    V[7] = V[3]
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in V[i]]) for i in range(len(V))],
+        "vec_id long, embedding array<float>",
+    )
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(40)
+
+    def embed(df, gate):
+        out = embed_dedup_pairs(df, dim=8, threshold=0.3, driver_local_max_vectors=gate)
+        return out.schema, sorted(map(tuple, out.collect()))
+
+    def bpe(df, gate):
+        return bpe_train(df, "text", n_merges=6, driver_local_max_words=gate)
+
+    one_count = _jobs_and_result(spark, vecs.count)[0]  # 2 jobs under AQE
+    for fn, df in ((embed, vecs), (bpe, docs)):
+        n_off, off = _jobs_and_result(spark, lambda: fn(df, 0))
+        n_on, on = _jobs_and_result(spark, lambda: fn(df, 1))
+        assert off == on and n_off == n_on - one_count, (fn.__name__, n_off, n_on)
+        assert (off[1] if fn is embed else off), fn.__name__
+        empty = df.limit(0)
+        assert fn(empty, 0) == fn(empty, 1), fn.__name__
 
 
 def test_pack_sequences_inclusive_cumsum_and_batches(spark):
